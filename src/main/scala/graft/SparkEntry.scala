@@ -1420,8 +1420,8 @@ object SparkEntry {
     },
 
     // BLOOM-path decontamination: same 13-gram rule, but the bench set
-    // collapses to a 4 KiB BLOOM-1 blob shipped to every task as a
-    // literal — the corpus side tests each doc's grams INLINE with
+    // collapses to a 4 KiB BLOOM-1 blob broadcast once to every
+    // executor — the corpus side tests each doc's grams INLINE with
     // zero corpus shuffle (the exact-join version must distinct +
     // shuffle every (doc, gram) pair). False positives are
     // deterministic under the frozen hash and the oracle recomputes
@@ -1462,7 +1462,8 @@ object SparkEntry {
           .toDF("probe"))
         .distinct()
       probes.select($"probe", graft.functions.Bloom
-        .bloomContains(lit(merged), $"probe", 7).as("hit"))
+        .bloomContains(s.sparkContext.broadcast(merged), $"probe", 7)
+        .as("hit"))
     },
 
     // BM25 top-k retrieval over an inverted index: every 101st doc's
@@ -1880,25 +1881,8 @@ object SparkEntry {
       val (single, _) = Job.run(s,
         s.read.parquet(inDir.toString).as[Turn], "single",
         orderOutput = false)
-      val singleDF = single.toDF().localCheckpoint()
-      // set-difference counts in ONE grouped pass over presence flags
-      // (exactly except()'s distinct-minus semantics, incl. null-safe
-      // grouping) instead of two except jobs + two count jobs; the raw
-      // row delta rides a second cheap aggregate over the same union
-      val cols = singleDF.columns.toSeq
-      val tagged = resumed.select(cols.map(col): _*)
-        .withColumn("__a", lit(1L)).withColumn("__b", lit(0L))
-        .unionByName(singleDF
-          .withColumn("__a", lit(0L)).withColumn("__b", lit(1L)))
-      val totals = tagged
-        .agg(sum($"__a").as("na"), sum($"__b").as("nb")).head
-      val delta = totals.getLong(0) - totals.getLong(1)
-      val sides = tagged.groupBy(cols.map(col): _*)
-        .agg(max($"__a").as("ia"), max($"__b").as("ib"))
-        .agg(count(when($"ia" === 1 && $"ib" === 0, 1)).as("only_res"),
-          count(when($"ib" === 1 && $"ia" === 0, 1)).as("only_single"))
-        .head
-      val diff = sides.getLong(0) + sides.getLong(1)
+      val (diff, delta) = resumeDiff(resumed,
+        single.toDF().localCheckpoint())
       s.range(1).select(
         lit(n1).as("files_run1"), lit(n2).as("files_run2"),
         lit(n3).as("files_replay"),
@@ -2343,6 +2327,36 @@ object SparkEntry {
     deleteTree(dir)
     dir.mkdirs()
     dir.toString
+  }
+
+  /** x_resume's comparison of the resumed output with the single-shot
+    * output: (rows present on one side only, counted as except()'s
+    * distinct-minus in both directions; resumed minus single-shot row
+    * count). Set-difference counts come from ONE grouped pass over
+    * presence flags (incl. null-safe grouping) instead of two except
+    * jobs + two count jobs; the raw row delta rides a second cheap
+    * aggregate over the same union. Sums over zero rows are NULL, so
+    * both coalesce to 0: two empty outputs are a match, not an NPE.
+    */
+  private[graft] def resumeDiff(resumed: DataFrame, single: DataFrame)
+      : (Long, Long) = {
+    val cols = single.columns.toSeq
+    val tagged = resumed.select(cols.map(col): _*)
+      .withColumn("__a", lit(1L)).withColumn("__b", lit(0L))
+      .unionByName(single
+        .withColumn("__a", lit(0L)).withColumn("__b", lit(1L)))
+    val totals = tagged
+      .agg(coalesce(sum(col("__a")), lit(0L)).as("na"),
+        coalesce(sum(col("__b")), lit(0L)).as("nb")).head
+    val sides = tagged.groupBy(cols.map(col): _*)
+      .agg(max(col("__a")).as("ia"), max(col("__b")).as("ib"))
+      .agg(count(when(col("ia") === 1 && col("ib") === 0, 1))
+        .as("only_res"),
+        count(when(col("ib") === 1 && col("ia") === 0, 1))
+          .as("only_single"))
+      .head
+    (sides.getLong(0) + sides.getLong(1),
+      totals.getLong(0) - totals.getLong(1))
   }
 
   /** Delete the staged input + checkpoint (no longer needed once the

@@ -1,11 +1,12 @@
 package graft.functions
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, LeafExpression, Literal, RuntimeReplaceable, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, EmptyBlock, ExprCode, FalseLiteral, JavaCode}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -13,8 +14,9 @@ import org.apache.spark.unsafe.types.UTF8String
 /** BLOOM-1 membership sketch family — the scale path for blocklist /
   * benchmark-membership tests over a 100 TB corpus: build the filter
   * ONCE over the small reference set (eval-set n-grams, a URL
-  * blocklist, a vocabulary slice), ship the m/8-byte blob to every
-  * task as a literal, and test each row's values INLINE — zero corpus
+  * blocklist, a vocabulary slice), broadcast the m/8-byte blob once
+  * (`Bloom.bloomContains(Broadcast, ..)` — tasks carry the handle, not
+  * a copy), and test each row's values INLINE — zero corpus
   * shuffle, versus the exact-join formulation whose corpus side must
   * distinct + shuffle every (doc, gram) pair. Per-slice blobs are
   * OR-mergeable (`graft_bloom_merge`), so the sketch-store pattern
@@ -63,6 +65,14 @@ object BloomOps {
       blob(pos >> 3) = (blob(pos >> 3) | (1 << (pos & 7))).toByte
       i += 1
     }
+  }
+
+  /** Plan-string form of a blob argument: a binary literal renders as
+    * its size, never as megabytes of hex.
+    */
+  def render(blob: Expression): String = blob match {
+    case Literal(b: Array[Byte], BinaryType) => s"<blob ${b.length} bytes>"
+    case e => e.toString
   }
 
   /** Codegen entry point: true iff all k probe bits are set. An empty
@@ -212,15 +222,25 @@ case class BloomMergeBlobs(child: Expression,
   * blob's own length (so it cannot disagree with the build side); k
   * must match the build-side k — a smaller k would accept supersets,
   * so it is part of the sketch table's schema contract.
+  *
+  * This is the LOGICAL probe: plan identity and canonicalization see
+  * the blob by content (a binary literal compares with
+  * `Arrays.equals`), while plan strings render it as `<blob N bytes>`
+  * instead of hex-encoding megabytes into every explain, AQE update
+  * and SQL event. At optimization it is replaced by `BloomProbe`:
+  * when the caller shipped the blob as a broadcast (`shipped`), the
+  * probe reads that handle and the literal leaves the plan — tasks
+  * carry a few-byte handle instead of a blob copy per stage. Without
+  * a handle (SQL surface, blob columns, scalar subqueries) the probe
+  * evaluates `blob` as given.
   */
 case class BloomContains(blob: Expression, value: Expression,
-    k: Expression) extends TernaryExpression {
+    k: Expression)(val shipped: Option[BroadcastBlob] = None)
+    extends Expression with RuntimeReplaceable {
 
-  override def first: Expression = blob
-  override def second: Expression = value
-  override def third: Expression = k
-
+  override def children: Seq[Expression] = Seq(blob, value, k)
   override def dataType: DataType = BooleanType
+  override def nullable: Boolean = blob.nullable || value.nullable
   override def prettyName: String = "graft_bloom_contains"
 
   override def checkInputDataTypes(): TypeCheckResult =
@@ -236,6 +256,38 @@ case class BloomContains(blob: Expression, value: Expression,
         s"${Seq(blob, value, k).map(_.dataType.catalogString)
           .mkString(", ")}")
 
+  override lazy val replacement: Expression =
+    BloomProbe(shipped.getOrElse(blob), value, k)
+
+  // RuntimeReplaceable canonicalizes to the replacement, whose handle
+  // compares by broadcast id; keep comparing the blob by content
+  override lazy val canonicalized: Expression = withCanonicalizedChildren
+
+  override protected def otherCopyArgs: Seq[AnyRef] = shipped :: Nil
+
+  override def toString: String =
+    s"$prettyName(${BloomOps.render(blob)}, $value, $k)"
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Expression =
+    copy(blob = newChildren(0), value = newChildren(1),
+      k = newChildren(2))(shipped)
+}
+
+/** The optimized probe `BloomContains` is replaced by: the per-row
+  * kernel over a blob expression (a `BroadcastBlob` handle, or the
+  * logical probe's own blob when none was shipped).
+  */
+case class BloomProbe(blob: Expression, value: Expression,
+    k: Expression) extends TernaryExpression {
+
+  override def first: Expression = blob
+  override def second: Expression = value
+  override def third: Expression = k
+
+  override def dataType: DataType = BooleanType
+  override def prettyName: String = "graft_bloom_probe"
+
   private lazy val kVal: Int = k.eval().asInstanceOf[Number].intValue
 
   override protected def nullSafeEval(b: Any, v: Any, kk: Any): Any =
@@ -247,9 +299,42 @@ case class BloomContains(blob: Expression, value: Expression,
     defineCodeGen(ctx, ev, (b, v, _) =>
       s"graft.functions.BloomOps.contains($b, $v, $kVal)")
 
+  override def toString: String =
+    s"$prettyName(${BloomOps.render(blob)}, $value, $k)"
+
   override protected def withNewChildrenInternal(newFirst: Expression,
       newSecond: Expression, newThird: Expression): Expression =
     copy(blob = newFirst, value = newSecond, k = newThird)
+}
+
+/** A blob shipped once per executor as a broadcast: tasks deserialize
+  * the handle, not the bytes, and read the value from the executor's
+  * block manager once per task (interpreted) or per generated class.
+  * Not foldable, so constant folding cannot turn it back into a
+  * literal.
+  */
+case class BroadcastBlob(handle: Broadcast[Array[Byte]], length: Int)
+    extends LeafExpression {
+
+  @transient private lazy val bytes: Array[Byte] = handle.value
+
+  override def dataType: DataType = BinaryType
+  override def nullable: Boolean = false
+
+  override def eval(input: InternalRow): Any = bytes
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("blobHandle", handle,
+      classOf[Broadcast[_]].getName)
+    val v = ctx.addMutableState("byte[]", "blob",
+      b => s"$b = (byte[]) $ref.value();")
+    ev.copy(code = EmptyBlock, isNull = FalseLiteral,
+      value = JavaCode.global(v, BinaryType))
+  }
+
+  override def toString: String =
+    s"<blob $length bytes, broadcast ${handle.id}>"
 }
 
 object Bloom {
@@ -266,10 +351,19 @@ object Bloom {
       BloomMergeBlobs(ColumnBridge.expression(col))
         .toAggregateExpression())
 
-  /** Column API: membership probe against a blob (typically a
-    * `lit(blobBytes)` broadcast to every task).
+  /** Column API: membership probe against a blob column or literal,
+    * evaluated as given in every task.
     */
   def bloomContains(blob: Column, value: Column, k: Int): Column =
     ColumnBridge.column(BloomContains(ColumnBridge.expression(blob),
-      ColumnBridge.expression(value), Literal(k)))
+      ColumnBridge.expression(value), Literal(k))())
+
+  /** Column API: membership probe against a broadcast blob — the plan
+    * keeps the blob as a literal for identity, tasks read the handle.
+    */
+  def bloomContains(blob: Broadcast[Array[Byte]], value: Column,
+      k: Int): Column =
+    ColumnBridge.column(BloomContains(Literal(blob.value),
+      ColumnBridge.expression(value), Literal(k))(
+      Some(BroadcastBlob(blob, blob.value.length))))
 }

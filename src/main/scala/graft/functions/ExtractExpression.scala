@@ -373,7 +373,7 @@ object GraftOpFunctions {
         require(exprs.length == 3,
           s"graft_bloom_contains(blob, value, k) takes 3 arguments, " +
             s"got ${exprs.length}")
-        BloomContains(exprs(0), exprs(1), exprs(2))
+        BloomContains(exprs(0), exprs(1), exprs(2))()
       }),
     (FunctionIdentifier("graft_covered_runs"),
       new ExpressionInfo(classOf[CoveredRuns].getName,

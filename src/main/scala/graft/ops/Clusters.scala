@@ -127,7 +127,19 @@ object Clusters {
     * SPARK_GRAFT_CC_LOCAL_MAX (0 disables the local path entirely).
     */
   val LocalSolveMaxEdges: Long =
-    sys.env.getOrElse("SPARK_GRAFT_CC_LOCAL_MAX", "4194304").toLong
+    localSolveMax(sys.env.get("SPARK_GRAFT_CC_LOCAL_MAX"))
+
+  /** The SPARK_GRAFT_CC_LOCAL_MAX edge bound: 4194304 when unset; a
+    * malformed or negative value is an error naming the variable, not
+    * a bare NumberFormatException or a silently disabled path.
+    */
+  private[ops] def localSolveMax(raw: Option[String]): Long = raw match {
+    case None => 4194304L
+    case Some(v) => v.trim.toLongOption.filter(_ >= 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CC_LOCAL_MAX must be a non-negative edge count, " +
+          s"got '$v'"))
+  }
 
   /** Driver union-find over a collected edge list: (id -> min id of its
     * component) for every id that appears in an edge. Union by rank,

@@ -174,29 +174,20 @@ object Lexicon {
     (Vector("devanagari"), "hi"),
     (Vector("thai"), "th"))
 
-  /** LANGID-4 as a pure codegen'd Column expression (no UDF). */
+  /** LANGID-4: the script-presence branches stay Catalyst `rlike`
+    * tests over the original text (first match wins, in
+    * `scriptBranches` order); everything else is ONE native pass over
+    * `lower(text)` (`graft.functions.LangIdOps.argmax`: split on ' ',
+    * one table lookup per token, the frozen ratio and tie rules). A
+    * row with no tokens is all spaces, so no script branch can match
+    * it and the argmax answers 'other' — rule 1 needs no branch of its
+    * own. No UDF, no higher-order functions.
+    */
   def langId(text: Column): Column = {
-    val toks = filter(split(lower(text), " "), x => x =!= lit(""))
-    // denominator floored at 1 (mirrored in the oracle SQL) so the
-    // empty-token row never divides by zero on either engine
-    val total = greatest(size(toks), lit(1)).cast("double")
-    def ratio(lex: Lex): Column = {
-      val arr = array(lex.words.map(lit): _*)
-      size(filter(toks, x => array_contains(arr, x)))
-        .cast("double") / total
-    }
-    val r = langOrder.map(l => ratio(collection(l)))
-    // lang i wins if its ratio >= every later ratio (earlier langs
-    // already failed their own test) and >= 0.03
-    val base = scriptBranches.foldLeft(
-      when(size(toks) === 0, "other")) { case (acc, (classes, lang)) =>
-      acc.when(text.rlike(rangesRegex(classes: _*)), lang)
-    }
-    langOrder.indices.foldLeft(base) { (acc, i) =>
-      val wins = (i + 1 until langOrder.length)
-        .map(j => r(i) >= r(j))
-        .foldLeft(r(i) >= 0.03)(_ && _)
-      acc.when(wins, langOrder(i))
-    }.otherwise("other")
+    val ((first, firstLang), rest) = (scriptBranches.head, scriptBranches.tail)
+    rest.foldLeft(when(text.rlike(rangesRegex(first: _*)), firstLang)) {
+      case (acc, (classes, lang)) =>
+        acc.when(text.rlike(rangesRegex(classes: _*)), lang)
+    }.otherwise(graft.functions.LangIdOps.stopwordArgmax(lower(text)))
   }
 }

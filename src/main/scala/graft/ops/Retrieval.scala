@@ -83,22 +83,33 @@ object Retrieval {
   /** Bloom-path decontamination — same rule and output shape as
     * `decontaminate`, but the bench set collapses to one BLOOM-1 blob
     * (m bits, k probes — see `graft.functions.BloomOps` for the frozen
-    * hash and sizing rule) shipped to every task as a literal, and the
-    * corpus side tests each doc's DISTINCT n-grams inline: ZERO corpus
-    * shuffle, versus the exact join's corpus-wide distinct(doc, gram)
-    * exchange. False positives are deterministic under the frozen hash
-    * (the oracle recomputes the exact bit positions); size m ~ 16x the
-    * bench gram count to keep them ~1e-4.
+    * hash and sizing rule) and the corpus side tests each doc's
+    * DISTINCT n-grams inline: ZERO corpus shuffle, versus the exact
+    * join's corpus-wide distinct(doc, gram) exchange. False positives
+    * are deterministic under the frozen hash (the oracle recomputes
+    * the exact bit positions); size m ~ 16x the bench gram count to
+    * keep them ~1e-4.
+    *
+    * The blob is built eagerly (one m/8-byte row) and broadcast ONCE:
+    * the returned plan keeps it as a literal inside the logical probe
+    * (plan identity, `<blob N bytes>` in plan strings), and the
+    * optimized plan reads the broadcast handle — so a multi-MB blob is
+    * neither hex-rendered into plan strings nor copied into every
+    * stage's task binary. The handle lives as long as the returned
+    * frame (the context cleaner drops it after that).
     */
   def decontaminateBloom(spark: SparkSession, corpus: DataFrame,
       bench: DataFrame, n: Int = 13, m: Int = 32768, k: Int = 7)
       : DataFrame = {
     import spark.implicits._
+    // no distinct() before the aggregate: a Bloom insert is idempotent,
+    // so repeated grams set the same bits and the gram shuffle buys
+    // nothing
     val blob = bench
       .select(explode(wordNgrams(toks($"text"), n)).as("g"))
-      .distinct()
       .agg(graft.functions.Bloom.bloomAgg($"g", m, k).as("b"))
       .head.getAs[Array[Byte]](0) // one m/8-byte row: scalar bootstrap
+    val shipped = spark.sparkContext.broadcast(blob)
     // Once: the n_shared > 0 filter would otherwise be pushed below
     // the spread exchange with the WHOLE gram+bloom chain substituted
     // into it — the chain then runs twice, and the pushed copy runs on
@@ -109,7 +120,7 @@ object Retrieval {
       .select($"doc_id",
         graft.functions.OnceOps.once(
           size(filter($"gs", g => graft.functions.Bloom
-            .bloomContains(lit(blob), g, k))).cast("long"))
+            .bloomContains(shipped, g, k))).cast("long"))
           .as("n_shared"))
       .filter($"n_shared" > 0)
   }

@@ -88,4 +88,59 @@ class BloomSpec extends AnyFunSuite {
         s"AS hit FROM bloom_in").collect()
     assert(hits.forall(_.getBoolean(1)))
   }
+
+  test("a broadcast probe equals the literal probe; both compare by " +
+    "blob content and render the blob as its size, never as hex") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.BinaryType
+    import org.apache.spark.sql.graft.ColumnBridge
+    val inserted = (1 to 100).map(i => s"tok_$i")
+    val blob = buildBlob(inserted)
+    // repartition: a projection straight over local rows would be
+    // folded into a LocalRelation before execution, leaving no probe
+    val probes = (inserted.take(10) ++ (1 to 200).map(i => s"x_$i"))
+      .toDF("v").repartition(2)
+    val shipped = spark.sparkContext.broadcast(blob)
+    def hits(c: org.apache.spark.sql.Column) =
+      probes.select($"v", c.as("hit")).collect()
+        .map(r => r.getString(0) -> r.getBoolean(1)).toMap
+    val viaBroadcast = probes.select($"v",
+      Bloom.bloomContains(shipped, $"v", K).as("hit"))
+    assert(hits(Bloom.bloomContains(shipped, $"v", K)) ==
+      hits(Bloom.bloomContains(lit(blob), $"v", K)))
+    // the optimized plan holds the handle, not the bytes
+    val optimized = viaBroadcast.queryExecution.optimizedPlan
+    assert(optimized.flatMap(_.expressions.flatMap(_.collect {
+      case l @ Literal(_: Array[Byte], BinaryType) => l
+    })).isEmpty)
+    assert(optimized.toString.contains(s"<blob ${M / 8} bytes, broadcast"))
+    // identity by content: a second handle, or none, is the same probe
+    val e1 = ColumnBridge.expression(Bloom.bloomContains(shipped, $"v", K))
+    val e2 = ColumnBridge.expression(Bloom.bloomContains(
+      spark.sparkContext.broadcast(blob.clone()), $"v", K))
+    val e3 = ColumnBridge.expression(Bloom.bloomContains(lit(blob), $"v", K))
+    assert(e1 == e2 && e1 == e3)
+    assert(e1.canonicalized == e2.canonicalized)
+    val other = blob.clone(); other(0) = (other(0) ^ 1).toByte
+    assert(e1 != ColumnBridge.expression(Bloom.bloomContains(
+      spark.sparkContext.broadcast(other), $"v", K)))
+    val hex = blob.take(16).map(b => f"$b%02X").mkString
+    for (e <- Seq(e1, e3)) {
+      assert(e.toString.startsWith(s"graft_bloom_contains(<blob ${M / 8} " +
+        "bytes>"), e.toString)
+      assert(!e.toString.toUpperCase.contains(hex))
+    }
+    // the SQL surface renders a literal blob the same way, through
+    // optimization (the probe over a column is not constant-folded)
+    GraftOpFunctions.register(spark)
+    probes.createOrReplaceTempView("bloom_probes")
+    val viaSql = spark.sql(s"SELECT v, graft_bloom_contains(X'${blob
+      .map(b => f"$b%02X").mkString}', v, $K) AS hit FROM bloom_probes")
+    assert(viaSql.collect().map(r => r.getString(0) -> r.getBoolean(1))
+      .toMap == hits(Bloom.bloomContains(shipped, $"v", K)))
+    val plan = viaSql.queryExecution.executedPlan.toString
+    assert(plan.contains(s"<blob ${M / 8} bytes>"), plan)
+    assert(!plan.toUpperCase.contains(hex), plan)
+  }
 }

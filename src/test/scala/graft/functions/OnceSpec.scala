@@ -1,6 +1,10 @@
 package graft.functions
 
 import graft.pipe.SparkTestSession
+import org.apache.spark.sql.catalyst.expressions.{Expression, Pmod}
+import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** graft_once (r6 optimization): a value-identity no-op that pins an
@@ -33,11 +37,34 @@ class OnceSpec extends AnyFunSuite {
       .withColumn("q", OnceOps.once(pmod($"id" * 37, lit(97))))
       .filter($"q" > 10)
     assert(df.count() == 88)
-    // the defining expression appears exactly once in the physical plan
-    // (without the barrier, pushdown duplicates it into a filter below
-    // the repartition exchange)
+    // the defining expression appears exactly once in the physical
+    // plan's projections and filters, and never in a filter below the
+    // repartition exchange (where pushdown would duplicate it)
+    val nodes = planNodes(df.queryExecution.executedPlan)
+    def pmods(p: SparkPlan): Int = p match {
+      case pr: ProjectExec => pr.projectList.map(countPmod).sum
+      case f: FilterExec => countPmod(f.condition)
+      case _ => 0
+    }
     val plan = df.queryExecution.executedPlan.toString
-    val occurrences = "pmod".r.findAllIn(plan).length
-    assert(occurrences == 1, s"expected 1 evaluation site, plan:\n$plan")
+    assert(nodes.map(pmods).sum == 1,
+      s"expected 1 evaluation site, plan:\n$plan")
+    val exchanges = nodes.collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.nonEmpty, plan)
+    for (e <- exchanges; f <- planNodes(e).collect { case f: FilterExec => f })
+      assert(countPmod(f.condition) == 0,
+        s"pmod pushed below the exchange, plan:\n$plan")
+  }
+
+  private def countPmod(e: Expression): Int =
+    e.collect { case p: Pmod => p }.length
+
+  /** Every node of a physical plan, looking through adaptive plans
+    * and query stages.
+    */
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case q: QueryStageExec => q +: planNodes(q.plan)
+    case other => other +: other.children.flatMap(planNodes)
   }
 }

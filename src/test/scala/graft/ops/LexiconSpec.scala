@@ -92,4 +92,79 @@ class LexiconSpec extends AnyFunSuite {
     assert(Lexicon.charClass(0x05D0) == "hebrew") // א
     assert(Lexicon.charClass(0x0915) == "devanagari") // क
   }
+
+  test("LANGID-4: the one-pass kernel equals the retired Column " +
+    "expression on 24k random rows (nulls, blanks, tabs, space runs, " +
+    "uppercase non-ASCII, every stopword, every script)") {
+    import spark.implicits._
+    val r = new scala.util.Random(41)
+    val stop = Lexicon.stopwords.flatMap(_.words).distinct
+    val scripts = Seq("の", "テ", "한", "中", "д", "ع", "ע", "λ", "ह", "ก")
+    val other = Seq("zzz", "qqq", "cat", "İ", "É", "İL", "ÉTAIT", "DER",
+      "The", "a\tthe", "the\t", "\t", "x1", "über", "ÜBER", "même",
+      "MÊME", "é", "è", "ça")
+    val seps = Seq(" ", " ", " ", "  ", "   ", "\t", " \t ")
+    def token(pStop: Double): String = {
+      val u = r.nextDouble()
+      if (u < 0.01) scripts(r.nextInt(scripts.length))
+      else if (u < 0.01 + pStop) {
+        val w = stop(r.nextInt(stop.length))
+        if (r.nextInt(10) == 0) w.toUpperCase else w
+      } else other(r.nextInt(other.length))
+    }
+    val special = Seq[String](null, "", " ", "   ", "\t", " \t ", "İ",
+      "É É", "THE", "the", "de", "  de  la  ")
+    val random = (1 to 24000).map { _ =>
+      val pStop = Seq(0.0, 0.02, 0.05, 0.2, 0.6)(r.nextInt(5))
+      val n = r.nextInt(60)
+      val lead = if (r.nextInt(8) == 0) seps(r.nextInt(seps.length)) else ""
+      lead + (0 until n).map(_ => token(pStop))
+        .map(_ + seps(r.nextInt(seps.length))).mkString
+    }
+    val rows = (special ++ random ++ stop ++ scripts).zipWithIndex
+      .map { case (t, i) => (i.toLong, t) }
+    val out = rows.toDF("id", "text")
+      .select($"id", Lexicon.langId($"text").as("got"),
+        LexiconSpec.retiredLangId($"text").as("want"))
+      .as[(Long, String, String)].collect()
+    assert(out.length == rows.length)
+    val bad = out.filter(o => o._2 != o._3)
+    assert(bad.isEmpty, bad.take(5).map(b =>
+      s"${b._1}: '${rows(b._1.toInt)._2}' got ${b._2} want ${b._3}")
+      .mkString("; "))
+    // every decision of LANGID-4 is exercised
+    assert(out.map(_._3).toSet == (Lexicon.langOrder ++
+      Lexicon.scriptBranches.map(_._2) :+ "other").toSet)
+    assert(out.head._2 == "other", "null text")
+  }
+}
+
+object LexiconSpec {
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.functions._
+  import Lexicon._
+
+  /** The LANGID-4 Column expression `Lexicon.langId` replaced: kept as
+    * the reference the native kernel must equal row for row.
+    */
+  def retiredLangId(text: Column): Column = {
+    val toks = filter(split(lower(text), " "), x => x =!= lit(""))
+    val total = greatest(size(toks), lit(1)).cast("double")
+    def ratio(lex: Lex): Column = {
+      val arr = array(lex.words.map(lit): _*)
+      size(filter(toks, x => array_contains(arr, x)))
+        .cast("double") / total
+    }
+    val r = langOrder.map(l => ratio(collection(l)))
+    val base = scriptBranches.foldLeft(
+      when(size(toks) === 0, "other")) { case (acc, (classes, lang)) =>
+      acc.when(text.rlike(rangesRegex(classes: _*)), lang)
+    }
+    langOrder.indices.foldLeft(base) { (acc, i) =>
+      val wins = (i + 1 until langOrder.length)
+        .map(j => r(i) >= r(j))
+        .foldLeft(r(i) >= 0.03)(_ && _)
+      acc.when(wins, langOrder(i))
+    }.otherwise("other")
+  }
 }

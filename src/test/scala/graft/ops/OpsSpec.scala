@@ -280,6 +280,19 @@ class ClustersSpec extends AnyFunSuite {
       Seq.empty[Long].toDF("id"), localSolveMaxEdges = Long.MaxValue)
     assert(none.collect().isEmpty)
   }
+
+  test("SPARK_GRAFT_CC_LOCAL_MAX: default when unset, non-negative " +
+    "counts accepted, malformed or negative values rejected by name") {
+    assert(Clusters.localSolveMax(None) == 4194304L)
+    assert(Clusters.localSolveMax(Some("0")) == 0L)
+    assert(Clusters.localSolveMax(Some(" 1024 ")) == 1024L)
+    for (bad <- Seq("4M", "", "1.5", "-1")) {
+      val e = intercept[IllegalArgumentException](
+        Clusters.localSolveMax(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CC_LOCAL_MAX"), bad)
+      assert(e.getMessage.contains(s"'$bad'"), bad)
+    }
+  }
 }
 
 class SimHashSpec extends AnyFunSuite {

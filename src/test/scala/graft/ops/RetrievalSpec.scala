@@ -154,4 +154,102 @@ class RetrievalSpec extends AnyFunSuite {
     assert(out == Map(1L -> ((1L, nllB)), 2L -> ((1L, nllB)),
       3L -> ((1L, nllC))))
   }
+
+  /** A corpus where some docs carry 4-word windows of a bench doc
+    * (true hits) and the rest are random words (clean unless the
+    * filter has a false positive).
+    */
+  private def decontamFixture() = {
+    import spark.implicits._
+    val r = new scala.util.Random(5)
+    def words(k: Int) = Seq.fill(k)(s"w${r.nextInt(400)}")
+    val bench = Seq.fill(30)(words(12).mkString(" "))
+    val corpus = (1 to 200).map { i =>
+      val base = words(6 + r.nextInt(20))
+      val text =
+        if (i % 7 == 0) {
+          val b = bench(r.nextInt(bench.length)).split(" ")
+          val at = r.nextInt(b.length - 3)
+          (base ++ b.slice(at, at + 4 + r.nextInt(3))).mkString(" ")
+        } else base.mkString(" ")
+      (i.toLong, text)
+    }
+    (corpus.toDF("doc_id", "text"), bench.toDF("text"), corpus, bench)
+  }
+
+  private def bloomGrams(text: String, n: Int): Seq[String] =
+    text.split(" ").filter(_.nonEmpty).sliding(n)
+      .filter(_.length == n).map(_.mkString(" ")).toSeq.distinct
+
+  test("decontaminateBloom flags exactly the docs a plain Scala " +
+    "BloomOps evaluation flags, with the same distinct-gram counts") {
+    import spark.implicits._
+    val (corpusDf, benchDf, corpus, bench) = decontamFixture()
+    val (n, m, k) = (4, 1 << 12, 7)
+    val blob = new Array[Byte](m / 8)
+    bench.flatMap(bloomGrams(_, n))
+      .foreach(graft.functions.BloomOps.add(blob, _, k))
+    val expected = corpus.map { case (id, t) =>
+      id -> bloomGrams(t, n).count(g => graft.functions.BloomOps
+        .contains(blob, org.apache.spark.unsafe.types.UTF8String
+          .fromString(g), k)).toLong
+    }.filter(_._2 > 0).toMap
+    val got = Retrieval.decontaminateBloom(spark, corpusDf, benchDf,
+      n = n, m = m, k = k).as[(Long, Long)].collect().toMap
+    assert(expected.size >= 28, "fixture plants hits in every 7th doc")
+    assert(got == expected)
+  }
+
+  test("decontaminateBloom ships a 4 MiB blob as a broadcast: small " +
+    "plan strings, no large binary literal after optimization") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.BinaryType
+    val (corpusDf, benchDf, _, _) = decontamFixture()
+    // repartition: a projection straight over local rows would be
+    // folded into a LocalRelation before execution, leaving no probe
+    val out = Retrieval.decontaminateBloom(spark, corpusDf.repartition(3),
+      benchDf, n = 4, m = 1 << 25, k = 7)
+    assert(out.count() >= 28)
+    val qe = out.queryExecution
+    def binaryLiterals(p: org.apache.spark.sql.catalyst.plans.logical
+        .LogicalPlan): Seq[Int] =
+      p.flatMap(_.expressions.flatMap(_.collect {
+        case Literal(b: Array[Byte], BinaryType) => b.length
+      }))
+    // the logical plan still carries the blob (plan identity)...
+    assert(binaryLiterals(qe.logical) == Seq(4 << 20))
+    // ...the optimized plan only the broadcast handle
+    assert(binaryLiterals(qe.optimizedPlan).forall(_ <= 64 * 1024))
+    val executed = qe.executedPlan.toString
+    assert(executed.length < 64 * 1024, s"${executed.length} chars")
+    assert(executed.contains("<blob 4194304 bytes, broadcast"))
+    assert(qe.analyzed.toString.contains("<blob 4194304 bytes>"))
+    assert(qe.analyzed.toString.length < 64 * 1024)
+  }
+
+  test("decontaminateBloom over a stream probes the shipped blob " +
+    "exactly like the batch call") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    val (corpusDf, benchDf, corpus, _) = decontamFixture()
+    val batch = Retrieval.decontaminateBloom(spark, corpusDf, benchDf,
+      n = 4, m = 1 << 12).as[(Long, Long)].collect().toSet
+    val mem = MemoryStream[(Long, String)]
+    val stream = Retrieval.decontaminateBloom(spark,
+      mem.toDF().toDF("doc_id", "text"), benchDf, n = 4, m = 1 << 12)
+    val q = stream.writeStream.format("memory")
+      .queryName("bloom_decontam_out").outputMode("append").start()
+    val (a, b) = corpus.splitAt(corpus.length / 2)
+    mem.addData(a)
+    q.processAllAvailable()
+    mem.addData(b) // a second micro-batch re-plans the same probe
+    q.processAllAvailable()
+    val got = spark.sql("SELECT doc_id, n_shared FROM bloom_decontam_out")
+      .as[(Long, Long)].collect().toSet
+    q.stop()
+    assert(batch.nonEmpty)
+    assert(got == batch)
+  }
 }
