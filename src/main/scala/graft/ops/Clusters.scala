@@ -212,8 +212,9 @@ object Clusters {
       // union-find absorbs both) is bounded, so label it on the driver
       // and attach labels with one broadcast join. Replaces the whole
       // O(log^2 n)-round loop: 1 job instead of ~4 stages/round.
-      val labels = unionFindLabels(raw.as[(Long, Long)].collect()
-        .collect { case (a, b) if a != b => (a, b) })
+      // Self-loops stay in: an id seen only in (a, a) pairs is a
+      // singleton the distributed path's vertex closure keeps too
+      val labels = unionFindLabels(raw.as[(Long, Long)].collect())
       val labelDf = spark.createDataset(labels.toSeq)
         .toDF("id", "comp")
       vertices.select($"id")

@@ -90,6 +90,18 @@ object Retrieval {
     * the exact bit positions); size m ~ 16x the bench gram count to
     * keep them ~1e-4.
     *
+    * Both sides hash grams in one pass over the UTF-8 bytes and never
+    * build a gram string: each token is folded once, and a gram's hash
+    * composes from its tokens' folds by Horner,
+    * fold(a ++ " " ++ b) = ((fold(a)*31 + 32) * 31^|b| + fold(b)) mod p
+    * (|b| in code points), the value `fold` gives the joined string —
+    * so bit positions, blob and output equal the gram-string chain's.
+    * The build aggregates the raw bench text with gram width n
+    * (`bloomAgg(.., gram = n)`); the probe (`Bloom.gramHits`) counts
+    * distinct hit grams, deciding distinctness by content among the
+    * hits only (a gram hits iff each copy of it does, and hits are
+    * rare, so clean grams are never compared).
+    *
     * The blob is built eagerly (one m/8-byte row) and broadcast ONCE:
     * the returned plan keeps it as a literal inside the logical probe
     * (plan identity, `<blob N bytes>` in plan strings), and the
@@ -106,21 +118,17 @@ object Retrieval {
     // so repeated grams set the same bits and the gram shuffle buys
     // nothing
     val blob = bench
-      .select(explode(wordNgrams(toks($"text"), n)).as("g"))
-      .agg(graft.functions.Bloom.bloomAgg($"g", m, k).as("b"))
+      .agg(graft.functions.Bloom.bloomAgg($"text", m, k, gram = n).as("b"))
       .head.getAs[Array[Byte]](0) // one m/8-byte row: scalar bootstrap
     val shipped = spark.sparkContext.broadcast(blob)
     // Once: the n_shared > 0 filter would otherwise be pushed below
-    // the spread exchange with the WHOLE gram+bloom chain substituted
-    // into it — the chain then runs twice, and the pushed copy runs on
-    // the narrow scan (measured: 1.8 s single-task filter stage)
+    // the spread exchange with the probe substituted into it — the
+    // probe then runs twice, and the pushed copy runs on the narrow
+    // scan (measured: 1.8 s single-task filter stage)
     spreadBatch(corpus)
       .select($"doc_id",
-        array_distinct(wordNgrams(toks($"text"), n)).as("gs"))
-      .select($"doc_id",
         graft.functions.OnceOps.once(
-          size(filter($"gs", g => graft.functions.Bloom
-            .bloomContains(shipped, g, k))).cast("long"))
+          graft.functions.Bloom.gramHits(shipped, $"text", n, k))
           .as("n_shared"))
       .filter($"n_shared" > 0)
   }

@@ -20,11 +20,15 @@ import org.apache.spark.sql.functions._
   * stage floor amortizes.
   *
   *   SPARK_GRAFT_CPUS=32 sbt "Test/runMain graft.Probe20 100000"
+  *
+  * Further arguments name the ops to run (all three when none), e.g.
+  * `Test/runMain graft.Probe20 20000 bloom_decontam` for one leg.
   */
 object Probe20 {
 
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toInt else 100000
+    val only = args.drop(1).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -79,7 +83,7 @@ object Probe20 {
           .as("text"))
     }
 
-    val ops: Seq[(String, String => DataFrame)] = Seq(
+    val allOps: Seq[(String, String => DataFrame)] = Seq(
       "line_dedup" -> { dir =>
         graft.ops.LineDedup.dedupLines(spark, asLines(corpus(dir))) },
       "exact_substr" -> { dir =>
@@ -96,6 +100,7 @@ object Probe20 {
         graft.ops.Retrieval.decontaminateBloom(spark,
           d.select($"doc_id", $"text"), bench, 13, m, 7)
       })
+    val ops = allOps.filter { case (q, _) => only.isEmpty || only(q) }
 
     def runOnce(f: String => DataFrame, dir: String): Double = {
       val t0 = System.nanoTime()

@@ -143,4 +143,162 @@ class BloomSpec extends AnyFunSuite {
     assert(plan.contains(s"<blob ${M / 8} bytes>"), plan)
     assert(!plan.toUpperCase.contains(hex), plan)
   }
+
+  /** The retired decontamination chain, kept as the reference for the
+    * one-pass kernel: non-empty ' '-split tokens, n-grams as joined
+    * strings, array_distinct, and a probe lambda per distinct gram.
+    */
+  private def refGramHits(blob: org.apache.spark.broadcast.Broadcast[
+      Array[Byte]], text: org.apache.spark.sql.Column, n: Int,
+      k: Int): org.apache.spark.sql.Column = {
+    val ws = filter(split(text, " "), w => w =!= "")
+    val grams = when(size(ws) >= n,
+      transform(sequence(lit(1), size(ws) - (n - 1)), i =>
+        array_join(slice(ws, i, lit(n)), " ")))
+      .otherwise(array())
+    size(filter(array_distinct(grams),
+      g => Bloom.bloomContains(blob, g, k))).cast("long")
+  }
+
+  /** Random documents as raw bytes over a small vocabulary (so grams
+    * repeat within and across docs): ASCII, é/İ/CJK, emoji, tabs and
+    * newlines inside tokens, malformed UTF-8, runs of spaces, and the
+    * degenerate null / "" / all-space docs.
+    */
+  private def randomDocs(count: Int, seed: Int): Seq[Array[Byte]] = {
+    val r = new scala.util.Random(seed)
+    def utf8(s: String) = s.getBytes("UTF-8")
+    def raw(b: Int*) = b.map(_.toByte).toArray
+    val vocab: IndexedSeq[Array[Byte]] =
+      Seq("a", "b", "c", "d", "the", "of", "caf\u00e9", "\u0130stanbul",
+        "\u4e2d\u6587", "\ud83d\ude00", "x\u00e9\ud83d\ude00y", "tab\tbed",
+        "new\nline", "\u00e9").map(utf8).toIndexedSeq ++
+        Seq(raw(0xFF), raw(0xFE), raw(0xC3), raw(0x80),
+          raw(0xC0, 0x80), raw(0xED, 0xA0, 0x80), raw(0xE0, 0x80, 0x80),
+          raw(0xF4, 0x90, 0x80, 0x80), raw(0xF0, 0x9F, 0x98),
+          raw('q', 0xE2, 'z'))
+    (0 until count).map { i =>
+      i % 101 match {
+        case 0 => null
+        case 1 => Array.emptyByteArray
+        case 2 => utf8(" " * (1 + r.nextInt(5)))
+        case 3 => // one phrase repeated: every gram repeats
+          val p = Seq.fill(3)(vocab(r.nextInt(vocab.length)))
+          Seq.fill(1 + r.nextInt(6))(p).flatten
+            .reduce((a, b) => a ++ utf8(" ") ++ b)
+        case _ =>
+          val toks = Seq.fill(r.nextInt(18))(
+            vocab(r.nextInt(if (r.nextInt(4) == 0) vocab.length else 6)))
+          val seps = Seq.fill(toks.length + 1)(
+            utf8(" " * (if (r.nextInt(6) == 0) r.nextInt(3) + 2 else 1)))
+          val body = toks.zip(seps.tail)
+            .flatMap { case (t, sp) => t ++ sp }.toArray
+          (if (r.nextBoolean()) seps.head else Array.emptyByteArray) ++
+            body.dropRight(if (r.nextBoolean()) 1 else 0)
+      }
+    }
+  }
+
+  private def docsDf(docs: Seq[Array[Byte]]) = {
+    import spark.implicits._
+    // a binary -> string cast keeps malformed bytes as they are
+    docs.zipWithIndex.map { case (b, i) => (i.toLong, b) }
+      .toDF("doc_id", "raw").repartition(4)
+      .select($"doc_id", $"raw".cast("string").as("text"))
+  }
+
+  test("gram-width bloomAgg builds the blob of explode(n-grams) + " +
+    "bloomAgg byte for byte, malformed UTF-8 included") {
+    import spark.implicits._
+    val docs = docsDf(randomDocs(3000, 41))
+    assert(docs.filter(!expr("is_valid_utf8(text)")).count() > 0)
+    for (n <- Seq(1, 3, 13)) {
+      val ws = filter(split($"text", " "), w => w =!= "")
+      val old = docs.select(explode(when(size(ws) >= n,
+        transform(sequence(lit(1), size(ws) - (n - 1)), i =>
+          array_join(slice(ws, i, lit(n)), " "))).otherwise(array()))
+        .as("g"))
+        .agg(Bloom.bloomAgg($"g", 1 << 14, 5).as("b"))
+        .head.getAs[Array[Byte]](0)
+      val direct = docs.agg(Bloom.bloomAgg($"text", 1 << 14, 5, gram = n))
+        .head.getAs[Array[Byte]](0)
+      assert(old.exists(_ != 0), s"n=$n")
+      assert(java.util.Arrays.equals(old, direct), s"n=$n")
+    }
+  }
+
+  test("gramHits equals the retired string chain on 20k random docs " +
+    "(null, blank, space runs, tabs, non-ASCII, emoji, malformed " +
+    "UTF-8, short docs, repeated grams), n = 1 and 3, empty blob") {
+    import spark.implicits._
+    val docs = docsDf(randomDocs(20200, 7)).cache()
+    val k = 3
+    for ((n, m) <- Seq((3, 1 << 16), (1, 1 << 10))) {
+      val blob = docs.filter($"doc_id" % 50 === 0)
+        .agg(Bloom.bloomAgg($"text", m, k, gram = n))
+        .head.getAs[Array[Byte]](0)
+      for (b <- Seq(blob, Array.emptyByteArray)) {
+        val shipped = spark.sparkContext.broadcast(b)
+        val rows = docs.select($"doc_id",
+          Bloom.gramHits(shipped, $"text", n, k).as("got"),
+          refGramHits(shipped, $"text", n, k).as("want"))
+          .as[(Long, Long, Long)].collect()
+        assert(rows.length == 20200)
+        val bad = rows.filter(r => r._2 != r._3)
+        assert(bad.isEmpty, s"n=$n blob=${b.length}: ${bad.take(5)
+          .mkString(", ")}")
+        val hits = rows.map(_._2)
+        if (b.isEmpty) assert(hits.forall(_ == 0))
+        else {
+          // a real mix: clean docs, single hits and multi-gram hits
+          assert(hits.count(_ == 0) > 1000, s"n=$n")
+          assert(hits.count(_ > 1) > 1000, s"n=$n")
+        }
+      }
+    }
+    docs.unpersist()
+  }
+
+  test("gramHits counts distinct grams by content: repeats count " +
+    "once, grams differing only in malformed bytes are one gram") {
+    import spark.implicits._
+    def bytes(s: String) = s.getBytes("UTF-8")
+    val docs = docsDf(Seq(
+      bytes("a b a b a b"),                  // 2-grams "a b", "b a"
+      bytes("a b") ++ Array(0xFF.toByte) ++ bytes(" a b") ++
+        Array(0xFE.toByte),                  // "a b U+FFFD" twice
+      bytes("  a\tb  a\tb  a\tb "),           // "a\tb a\tb" twice
+      bytes("\ud83d\ude00 \u4e2d \ud83d\ude00 \u4e2d")))
+    val blob = docs.agg(Bloom.bloomAgg($"text", 1 << 12, 4, gram = 2))
+      .head.getAs[Array[Byte]](0)
+    val got = docs.select(Bloom.gramHits(
+      spark.sparkContext.broadcast(blob), $"text", 2, 4))
+      .as[Long].collect().toSeq
+    // docsDf repartitions: compare as a multiset
+    assert(got.sorted == Seq(1L, 2L, 2L, 2L))
+  }
+
+  test("gramHits counts the distinct grams of long documents whose " +
+    "grams all hit: its own blob and a saturated blob") {
+    import spark.implicits._
+    // t0..t(w-1) twice: 2w-2 3-grams, w of them distinct. The retired
+    // chain re-splits the text inside its lambda, so it is the
+    // reference only for the shorter document; the long one (30,000
+    // distinct hit grams) checks against a plain Scala count
+    for (w <- Seq(3000, 30000)) {
+      val toks = (0 until 2 * w).map(i => s"t${i % w}")
+      assert(toks.sliding(3).map(_.mkString(" ")).toSet.size == w)
+      val docs = docsDf(Seq(toks.mkString(" ").getBytes("UTF-8")))
+      val own = docs.agg(Bloom.bloomAgg($"text", 1 << 20, 3, gram = 3))
+        .head.getAs[Array[Byte]](0)
+      for (b <- Seq(own, Array.fill[Byte](1 << 10)(-1))) {
+        val shipped = spark.sparkContext.broadcast(b)
+        val got = docs.select(Bloom.gramHits(shipped, $"text", 3, 3))
+          .as[Long].head
+        assert(got == w)
+        if (w == 3000) assert(docs.select(refGramHits(shipped, $"text", 3,
+          3)).as[Long].head == w)
+      }
+    }
+  }
 }

@@ -265,6 +265,22 @@ class ClustersSpec extends AnyFunSuite {
     assert(local.nonEmpty)
   }
 
+  test("an id seen only in self-loops, absent from vertices, is the " +
+    "same singleton on the local and distributed paths") {
+    import spark.implicits._
+    // 7 appears only as (7, 7) and 8 only as (8, 8) twice; neither is
+    // a vertex. 1-2 is an ordinary component, 5 a plain vertex
+    val pairs = Seq((1L, 2L), (7L, 7L), (8L, 8L), (8L, 8L), (2L, 2L))
+      .toDF("id_a", "id_b")
+    val verts = Seq(1L, 5L).toDF("id")
+    def run(cap: Long) = Clusters.connectedComponents(spark, pairs,
+      verts, localSolveMaxEdges = cap)
+      .collect().map(row => (row.getLong(0), row.getLong(1))).toSet
+    val local = run(Long.MaxValue)
+    assert(local == run(0L))
+    assert(local == Set((1L, 1L), (2L, 1L), (5L, 5L), (7L, 7L), (8L, 8L)))
+  }
+
   test("local path handles the 61-node path and empty graphs " +
     "(keeper = component min under the cap too)") {
     import spark.implicits._

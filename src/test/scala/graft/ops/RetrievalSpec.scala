@@ -228,6 +228,25 @@ class RetrievalSpec extends AnyFunSuite {
     assert(qe.analyzed.toString.length < 64 * 1024)
   }
 
+  test("decontaminateBloom's optimized plan holds no lambda chain: " +
+    "one gram-hits probe over the broadcast handle") {
+    import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, LambdaFunction}
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    val (corpusDf, benchDf, _, _) = decontamFixture()
+    val out = Retrieval.decontaminateBloom(spark, corpusDf.repartition(3),
+      benchDf, n = 4, m = 1 << 12, k = 7)
+    val exprs = out.queryExecution.optimizedPlan
+      .flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    assert(!exprs.exists {
+      case _: HigherOrderFunction | _: LambdaFunction => true
+      case _ => false
+    }, out.queryExecution.optimizedPlan.toString)
+    assert(exprs.count {
+      case i: StaticInvoke => i.functionName == "gramHits"
+      case _ => false
+    } == 1)
+  }
+
   test("decontaminateBloom over a stream probes the shipped blob " +
     "exactly like the batch call") {
     import spark.implicits._
