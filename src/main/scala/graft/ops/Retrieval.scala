@@ -30,6 +30,9 @@ object Retrieval {
 
   /** Word n-grams joined with single spaces; empty array when the doc
     * has fewer than n tokens (sequence() would otherwise run backwards).
+    * `ws` must be a projected column, not `toks(..)` inline: the lambda
+    * re-evaluates an outer expression for every gram, so an inline
+    * `toks` re-splits the text per gram — O(tokens^2) per document.
     */
   private def wordNgrams(ws: Column, n: Int): Column =
     when(size(ws) >= n,
@@ -63,8 +66,8 @@ object Retrieval {
   def decontaminate(spark: SparkSession, corpus: DataFrame,
       bench: DataFrame, n: Int = 13): DataFrame = {
     import spark.implicits._
-    val benchGrams = bench
-      .select(explode(wordNgrams(toks($"text"), n)).as("g"))
+    val benchGrams = bench.select(toks($"text").as("ws"))
+      .select(explode(wordNgrams($"ws", n)).as("g"))
       .distinct()
     // broadcast-join BEFORE the distinct: the bench membership test is
     // a per-row filter, so applying it under the (doc_id, g) distinct
@@ -73,7 +76,8 @@ object Retrieval {
     // (corpus-sized strings of n words each). Set semantics are
     // unchanged: distinct-then-filter == filter-then-distinct.
     spreadBatch(corpus)
-      .select($"doc_id", explode(wordNgrams(toks($"text"), n)).as("g"))
+      .select($"doc_id", toks($"text").as("ws"))
+      .select($"doc_id", explode(wordNgrams($"ws", n)).as("g"))
       .join(broadcast(benchGrams), Seq("g"))
       .distinct()
       .groupBy($"doc_id")

@@ -18,10 +18,6 @@ object TextStats {
 
   def nTokens(text: Column): Column = size(tokens(text)).cast("long")
 
-  def meanTokenLen(text: Column): Column =
-    round((length(text) - nTokens(text) + 1).cast("double") /
-      nTokens(text), 4)
-
   def stopwordRatio(text: Column): Column =
     round(size(filter(tokens(text),
       t => t.isin(stopwords: _*))).cast("double") / nTokens(text), 4)

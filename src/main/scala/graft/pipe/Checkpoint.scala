@@ -1,9 +1,15 @@
 package graft.pipe
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import graft.schema.Turn
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import graft.schema.LineageRow
+import graft.sources.TranscriptSource
 import java.nio.charset.StandardCharsets
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.mapreduce.{Job => HadoopJob, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 
 /** Snapshot-incremental resume (the north rule's "resumable from Iceberg
   * snapshot checkpoints", expressed against the sandbox's parquet
@@ -12,10 +18,13 @@ import org.apache.hadoop.fs.{FileContext, Options, Path}
   * incremental read is `option("start-snapshot-id", ...)`).
   *
   * Crash-safety contract:
-  *  - each increment stages its output under RUN-SCOPED paths
-  *    (`extracted/run=<id>`, `lineage/run=<id>`) with SaveMode.Overwrite,
-  *    so replaying a crashed run REWRITES the same directories instead of
-  *    appending duplicates (extraction is deterministic);
+  *  - each increment stages its output under RUN-SCOPED paths, each
+  *    cleared before it is written, so replaying a crashed run REWRITES
+  *    the same directories instead of appending duplicates (extraction
+  *    is deterministic): `extracted/run=<id>` is a Spark write with
+  *    SaveMode.Overwrite; `lineage/run=<id>` is then ONE parquet file
+  *    that the driver writes from the attempt-deduplicated accumulator
+  *    rows, staged after the output write and before the commit;
   *  - the manifest (processed input files + committed run ids) is the
   *    single atomic publish point, renamed over the old one with
   *    FileContext.rename(OVERWRITE) — never delete-then-rename, so no
@@ -57,9 +66,6 @@ object Checkpoint {
     }
   }
 
-  def processedFiles(spark: SparkSession, stateDir: String): Set[String] =
-    readManifest(spark, stateDir).files
-
   def committedRuns(spark: SparkSession, stateDir: String): Set[String] =
     readManifest(spark, stateDir).runs
 
@@ -92,10 +98,15 @@ object Checkpoint {
     * overwrite paths; then commit the manifest. Returns number of new
     * files processed. Safe to replay with the same runId after a crash
     * at any point.
+    *
+    * Two Spark jobs per increment, both moving data: the keyed
+    * exchange and the output write. The input is read with the
+    * contract schema (schema inference would be a third job, over the
+    * footers), and the lineage rows, already on the driver, are
+    * written without one.
     */
   def runIncremental(spark: SparkSession, inputDir: String,
       outputDir: String, stateDir: String, runId: String): Int = {
-    import spark.implicits._
     val manifest = readManifest(spark, stateDir)
     val todo = listInputFiles(spark, inputDir)
       .filterNot(manifest.files)
@@ -114,14 +125,41 @@ object Checkpoint {
     // global order is lost across runs regardless — and the range path
     // pays a sampling pass that re-executes the input scan per
     // increment (repartitionByRange samples its child)
-    val turns = spark.read.parquet(todo: _*).as[Turn]
+    val turns = TranscriptSource.parquet(spark, todo: _*)
     val (out, acc) = Job.run(spark, turns, runId, orderOutput = false)
     out.write.mode(SaveMode.Overwrite)
       .parquet(s"$outputDir/extracted/run=$runId")
-    Job.lineage(spark, acc).write.mode(SaveMode.Overwrite)
-      .parquet(s"$outputDir/lineage/run=$runId")
+    writeLineage(spark, Job.lineageRows(acc),
+      s"$outputDir/lineage/run=$runId")
     commit(spark, stateDir, todo, runId)
     todo.length
+  }
+
+  /** Write `rows` from the driver as ONE parquet file in `dir`, through
+    * the same parquet writer factory a Spark write uses, so the file's
+    * schema and footer metadata equal those of
+    * `createDataset(rows).write.parquet(dir)` — without running a job.
+    * `dir` is cleared first, so a replay rewrites it; zero rows still
+    * leave a readable file that carries the schema.
+    */
+  private def writeLineage(spark: SparkSession, rows: Seq[LineageRow],
+      dir: String): Unit = {
+    val path = new Path(dir)
+    val job = HadoopJob.getInstance(
+      new Configuration(spark.sparkContext.hadoopConfiguration))
+    val fs = path.getFileSystem(job.getConfiguration)
+    fs.delete(path, true)
+    fs.mkdirs(path)
+    val encoder = ExpressionEncoder[LineageRow]()
+    val factory = new ParquetFileFormat()
+      .prepareWrite(spark, job, Map.empty, encoder.schema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID())
+    val file = new Path(path, "part-00000" + factory.getFileExtension(ctx))
+    val writer = factory.newInstance(file.toString, encoder.schema, ctx)
+    val toRow = encoder.createSerializer()
+    try rows.foreach(r => writer.write(toRow(r)))
+    finally writer.close()
   }
 
   /** Read only COMMITTED run directories of `table` ("extracted" or

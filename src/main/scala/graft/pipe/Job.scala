@@ -211,11 +211,19 @@ object Job {
   def lineage(spark: SparkSession,
       acc: CollectionAccumulator[LineageRow]): Dataset[LineageRow] = {
     import spark.implicits._
+    spark.createDataset(lineageRows(acc))
+  }
+
+  /** The attempt-deduplicated rows of `lineage`, on the driver, ordered
+    * by (run, stage, partition).
+    */
+  def lineageRows(acc: CollectionAccumulator[LineageRow])
+      : Seq[LineageRow] = {
     import scala.jdk.CollectionConverters._
-    val deduped = acc.value.asScala
+    acc.value.asScala.toSeq
       .groupBy(r => (r.run_id, r.stage_id, r.partition_id))
       .map { case (_, rows) => rows.maxBy(_.attempt) }
       .toSeq
-    spark.createDataset(deduped)
+      .sortBy(r => (r.run_id, r.stage_id, r.partition_id))
   }
 }

@@ -34,9 +34,12 @@ object TranscriptSource {
     */
   val schema: StructType = Encoders.product[Turn].schema
 
-  def parquet(spark: SparkSession, path: String): Dataset[Turn] = {
+  /** Parquet file(s) or directories, read with the contract schema:
+    * no footer-inference job before the scan.
+    */
+  def parquet(spark: SparkSession, paths: String*): Dataset[Turn] = {
     import spark.implicits._
-    spark.read.schema(schema).parquet(path).as[Turn]
+    spark.read.schema(schema).parquet(paths: _*).as[Turn]
   }
 
   /** Line-delimited JSON (one turn object per line). */

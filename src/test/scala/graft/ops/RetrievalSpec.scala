@@ -21,6 +21,41 @@ class RetrievalSpec extends AnyFunSuite {
     assert(out == Map(1L -> 2L, 3L -> 2L))
   }
 
+  test("decontaminate on a 24k-token document counts the distinct " +
+    "shared grams a plain Scala count finds; no gram lambda re-splits " +
+    "the text") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, StringSplit}
+    val rnd = new scala.util.Random(20)
+    val words = IndexedSeq.tabulate(30)(i => s"w$i")
+    // double spaces leave empty tokens for toks to drop
+    val toks = IndexedSeq.fill(24000)(words(rnd.nextInt(words.size)))
+    val doc = toks.zipWithIndex
+      .map { case (w, i) => if (i % 97 == 0) s" $w" else w }.mkString(" ")
+    // bench docs: slices of the document (hits) and random text (few)
+    val bench = (0 until 40).map { b =>
+      if (b % 2 == 0) {
+        val at = rnd.nextInt(toks.size - 60)
+        toks.slice(at, at + 60).mkString(" ")
+      } else Seq.fill(60)(words(rnd.nextInt(words.size))).mkString(" ")
+    }
+    val n = 5
+    val shared = bloomGrams(doc, n).toSet
+      .intersect(bench.flatMap(bloomGrams(_, n)).toSet).size.toLong
+    val corpusDf = Seq((1L, doc), (2L, "w0 w1")).toDF("doc_id", "text")
+    val out = Retrieval.decontaminate(spark, corpusDf, bench.toDF("text"),
+      n = n)
+    assert(shared > 1000)
+    assert(out.as[(Long, Long)].collect().toMap == Map(1L -> shared))
+    val lambdas = out.queryExecution.optimizedPlan
+      .flatMap(_.expressions.flatMap(_.collect {
+        case l: LambdaFunction => l
+      }))
+    assert(lambdas.nonEmpty)
+    assert(!lambdas.exists(_.function.exists(_.isInstanceOf[StringSplit])),
+      out.queryExecution.optimizedPlan.toString)
+  }
+
   test("bm25 ranks higher-tf docs above lower-tf at comparable length " +
     "and never returns docs without any query term") {
     import spark.implicits._

@@ -1,12 +1,20 @@
 package graft.pipe
 
 import graft.extract.Extractor
-import graft.schema.{ExtractedTurn, Turn}
+import graft.schema.{ExtractedTurn, LineageRow, Turn}
+import graft.sources.TranscriptSource
 import graft.synth.{GoldenData, SynthTranscripts}
 import graft.text.Json
 import graft.text.Json._
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.Success
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
+import scala.collection.mutable
 
 /** Shared local session for all Spark-backed suites. */
 object SparkTestSession {
@@ -270,5 +278,179 @@ class CheckpointSpec extends AnyFunSuite {
     // and the refused attempt must not have touched committed output
     assert(Checkpoint.readCommitted(spark, outDir, stateDir).count()
       == count2)
+  }
+
+  // ---- an increment's jobs and its driver-written lineage ------------
+
+  private def tmpDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  private def convs(r: Range): Seq[Turn] =
+    r.flatMap(c => SynthTranscripts.genConv(42, c.toLong, 0, 0))
+
+  /** Land `turns` in `inDir` as ONE parquet file `<name>.parquet`. */
+  private def land(inDir: String, name: String, turns: Seq[Turn]): Unit = {
+    import spark.implicits._
+    val tmp = tmpDir("graft-ckpt-land")
+    spark.createDataset(turns).coalesce(1).write.mode("overwrite")
+      .parquet(tmp)
+    val part = new java.io.File(tmp).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    new java.io.File(inDir).mkdirs()
+    java.nio.file.Files.copy(part.toPath,
+      java.nio.file.Paths.get(s"$inDir/$name.parquet"))
+  }
+
+  /** Counts the jobs started under a local property, and gathers the
+    * lineage rows that successful tasks report through `lineage-<run>`
+    * accumulators — the rows the driver merges into the accumulator.
+    */
+  private final class Recorder extends SparkListener {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    private val rows = mutable.ArrayBuffer[LineageRow]()
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (Option(e.properties).exists(_.getProperty(Recorder.Key) != null))
+        jobs.incrementAndGet()
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      if (e.reason == Success) e.taskInfo.accumulables
+        .filter(_.name.exists(_.startsWith("lineage-")))
+        .flatMap(_.update).foreach {
+          case update: java.util.List[_] => rows.synchronized(
+            update.forEach { case r: LineageRow => rows += r })
+          case _ =>
+        }
+    /** `Job.lineage` over an accumulator holding the reported rows. */
+    def lineage(): Seq[LineageRow] = {
+      val acc = spark.sparkContext.collectionAccumulator[LineageRow]
+      rows.synchronized(rows.foreach(acc.add))
+      Job.lineage(spark, acc).collect().toSeq
+    }
+  }
+  private object Recorder { val Key = "graft.test.recorded" }
+
+  private def recorded[T](f: => T): (T, Recorder) = {
+    val sc = spark.sparkContext
+    val rec = new Recorder
+    sc.addSparkListener(rec)
+    sc.setLocalProperty(Recorder.Key, "on")
+    try (f, rec) finally {
+      sc.setLocalProperty(Recorder.Key, null)
+      org.apache.spark.TestBus.drain(sc)
+      sc.removeSparkListener(rec)
+    }
+  }
+
+  private def lineageKey(r: LineageRow) =
+    (r.run_id, r.stage_id, r.partition_id)
+
+  private def committedLineage(out: String, state: String)
+      : Seq[LineageRow] = {
+    import spark.implicits._
+    Checkpoint.readCommitted(spark, out, state, "lineage").as[LineageRow]
+      .collect().toSeq.sortBy(lineageKey)
+  }
+
+  /** The schema a Spark write of `Job.lineage` reads back with. */
+  private def sparkLineageSchema(): StructType = {
+    val dir = tmpDir("graft-ckpt-ref") + "/lineage"
+    Job.lineage(spark, spark.sparkContext.collectionAccumulator[LineageRow])
+      .write.parquet(dir)
+    spark.read.parquet(dir).schema
+  }
+
+  test("an increment runs exactly two Spark jobs: the keyed exchange " +
+    "and the output write (no schema inference, no lineage write job)") {
+    val base = tmpDir("graft-ckpt-jobs")
+    land(s"$base/in", "a", convs(0 until 3))
+    land(s"$base/in", "b", convs(3 until 6))
+    val (n, rec) = recorded(Checkpoint.runIncremental(spark, s"$base/in",
+      s"$base/out", s"$base/state", "run1"))
+    assert(n == 2)
+    assert(rec.jobs.get == 2)
+  }
+
+  test("driver-written lineage has the schema and parquet footer of " +
+    "the Spark write of Job.lineage") {
+    import scala.jdk.CollectionConverters._
+    val base = tmpDir("graft-ckpt-schema")
+    land(s"$base/in", "a", convs(0 until 4))
+    Checkpoint.runIncremental(spark, s"$base/in", s"$base/out",
+      s"$base/state", "run1")
+    val (out, acc) = Job.run(spark,
+      TranscriptSource.parquet(spark, s"$base/in"), "run1",
+      orderOutput = false)
+    out.write.format("noop").mode("overwrite").save()
+    val ref = s"$base/ref"
+    Job.lineage(spark, acc).write.parquet(ref)
+    val driver = s"$base/out/lineage/run=run1"
+    assert(spark.read.parquet(driver).schema ==
+      spark.read.parquet(ref).schema)
+    val conf = spark.sparkContext.hadoopConfiguration
+    def footers(dir: String) = new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(".parquet")).toSeq.map { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+          new Path(f.toString), conf))
+        try {
+          val m = r.getFooter.getFileMetaData
+          (m.getSchema, m.getKeyValueMetaData.asScala.toMap)
+        } finally r.close()
+      }
+    val Seq((schema, meta)) = footers(driver)
+    assert(meta.contains("org.apache.spark.sql.parquet.row.metadata"))
+    assert(footers(ref).nonEmpty)
+    assert(footers(ref).forall(_ == ((schema, meta))))
+  }
+
+  test("driver-written lineage rows equal Job.lineage of the increment's " +
+    "accumulator; summed rows_out equals the committed row count") {
+    val base = tmpDir("graft-ckpt-rows")
+    val turns = convs(0 until 5)
+    land(s"$base/in", "a", turns.take(40))
+    land(s"$base/in", "b", turns.drop(40))
+    val (out, state) = (s"$base/out", s"$base/state")
+    val (_, rec) = recorded(Checkpoint.runIncremental(spark, s"$base/in",
+      out, state, "run1"))
+    val lin = committedLineage(out, state)
+    assert(lin.nonEmpty)
+    assert(lin == rec.lineage().sortBy(lineageKey))
+    assert(lin.map(_.rows_in).sum == turns.size)
+    assert(lin.map(_.rows_out).sum ==
+      Checkpoint.readCommitted(spark, out, state).count())
+  }
+
+  test("a landed file with zero rows commits a readable, empty lineage " +
+    "directory") {
+    val base = tmpDir("graft-ckpt-empty")
+    land(s"$base/in", "empty", Seq.empty)
+    val (out, state) = (s"$base/out", s"$base/state")
+    val (n, rec) = recorded(Checkpoint.runIncremental(spark, s"$base/in",
+      out, state, "run1"))
+    assert(n == 1)
+    assert(Checkpoint.committedRuns(spark, state) == Set("run1"))
+    val lineage = Checkpoint.readCommitted(spark, out, state, "lineage")
+    assert(lineage.schema == sparkLineageSchema())
+    assert(lineage.count() == 0)
+    assert(rec.lineage().isEmpty)
+    assert(Checkpoint.readCommitted(spark, out, state).count() == 0)
+  }
+
+  test("replaying a crashed run leaves only the replay's lineage rows") {
+    import spark.implicits._
+    val base = tmpDir("graft-ckpt-replay")
+    land(s"$base/in", "a", convs(0 until 3))
+    land(s"$base/in", "b", convs(3 until 6))
+    val (out, state) = (s"$base/out", s"$base/state")
+    // the crashed attempt staged lineage under run=run1 (a Spark write,
+    // under the file name Spark gives it) and died before the commit
+    spark.createDataset(Seq(LineageRow("run1", 999, 0, 0, 7L, 7L, 0L, 1L,
+        "crashed"))).write.parquet(s"$out/lineage/run=run1")
+    val (n, rec) = recorded(Checkpoint.runIncremental(spark, s"$base/in",
+      out, state, "run1"))
+    assert(n == 2)
+    val lin = committedLineage(out, state)
+    assert(!lin.exists(_.extractor_version == "crashed"))
+    assert(lin == rec.lineage().sortBy(lineageKey))
+    assert(lin.map(_.rows_out).sum ==
+      Checkpoint.readCommitted(spark, out, state).count())
   }
 }
