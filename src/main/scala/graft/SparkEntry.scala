@@ -1586,7 +1586,7 @@ object SparkEntry {
         (id + 1000000L, t + " graft dedup tail marker")
       })
       graft.ops.MinHashDedup.nearDuplicates(s, corpus, threshold = 0.8,
-        shinglerArr = graft.ops.MinHashDedup.charNgramShingler(8))
+        shingler = graft.ops.MinHashDedup.charNgramShingler(8))
     },
 
     "t_dedup_embedding" -> { (s, dir) =>

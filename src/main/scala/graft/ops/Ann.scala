@@ -303,17 +303,10 @@ object Ann {
       vecCol: String, withCount: Boolean = true,
       spread: Boolean = false): (DataFrame, Long) = {
     val base = df.select(col(idCol), col(vecCol))
-    // spread=true (corpus sides): repartition to default parallelism
-    // when the upstream scan is narrower — a single-file corpus would
-    // otherwise run the CPU-heavy bucket-hash flatMap on 1-2 cores
-    // (guide §2.5 input-skew rule; no-op when the scan already has
-    // >= cores splits, so scale behavior is unchanged)
-    val sc = df.sparkSession.sparkContext
-    val widened =
-      if (spread && base.rdd.getNumPartitions < sc.defaultParallelism)
-        base.repartition(sc.defaultParallelism)
-      else base
-    val slim = widened.localCheckpoint()
+    // spread=true (corpus sides): a single-file corpus would otherwise
+    // run the CPU-heavy bucket-hash flatMap on 1-2 cores
+    val slim = (if (spread) MinHashDedup.spreadIfNarrow(base) else base)
+      .localCheckpoint()
     // the corpus side's count is never consumed (only the query side's
     // broadcast guard needs one) — skip the extra job
     (slim, if (withCount) slim.count() else -1L)
@@ -509,17 +502,14 @@ object Ann {
       }.toDF("tbl", "bucket", "id")
       .localCheckpoint()
 
-    // count-capped buckets (the MinHashDedup/EmbeddingDedup pattern):
+    // count-capped buckets (CappedBuckets.kept, as in the dedup ops):
     // a degenerate bucket — mass-duplicate content, residual sign
     // collapse — must not recreate the quadratic join this index
     // exists to avoid. Recall is re-won by the OTHER tables and the
     // 1-bit probes; corpora with huge exact-duplicate clusters should
     // run content-hash dedup first (the curation order anyway).
-    val keptBuckets = corpusRows.groupBy($"tbl", $"bucket")
-      .agg(count(lit(1)).as("n"))
-      .filter($"n" <= bucketCap)
-      .select($"tbl", $"bucket")
-    val keptRows = corpusRows.join(broadcast(keptBuckets),
+    val keptRows = corpusRows.join(broadcast(CappedBuckets.kept(
+      corpusRows, Seq("tbl", "bucket"), bucketCap, null)),
       Seq("tbl", "bucket"))
 
     val queryProbes = queriesM.as[(Long, Seq[Float])]

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Embedding-cosine near-duplicate detection: multi-table random-
   * hyperplane LSH (OR-amplification, same band pattern as MinHash) +
@@ -13,7 +12,7 @@ import org.apache.spark.sql.functions._
   *  - bucket keys are (table, bucket): 2^nPlanes buckets PER TABLE
   *    (16 planes -> 65k/table), so occupancy ~ N/2^nPlanes — the
   *    within-bucket pair expansion never approaches a quadratic scan;
-  *  - only slim (tbl, bucket, id, home) rows shuffle; vectors are
+  *  - only slim (tbl, bucket, id, tag) rows shuffle; vectors are
   *    joined back for candidate pairs alone;
   *  - `nProbe` bounds the dominant shuffle-volume constant: each vector
   *    emits nTables x (1 + nProbe) slim rows. Probes flip the nProbe
@@ -21,12 +20,11 @@ import org.apache.spark.sql.functions._
   *    near-neighbor is most likely to disagree on), the standard
   *    multi-probe ordering, so recall degrades gracefully as nProbe
   *    shrinks (measured curve in BENCH/BASELINE.md);
-  *  - bucket sizes are measured with a count-only pass first and
-  *    buckets over `bucketCap` are pruned BEFORE any collect_list;
-  *    passing `ledger` observes the dropped bucket/row counts on that
-  *    SAME pass (no second signature sweep) — `oversizedBuckets`
-  *    remains as a standalone inspection query over the shared
-  *    `probeRows` expansion;
+  *  - buckets over `bucketCap` are pruned by a count-only pass BEFORE
+  *    any collect_list (CappedBuckets); passing `ledger` observes the
+  *    dropped bucket/row counts on that SAME pass (no second signature
+  *    sweep) — `oversizedBuckets` remains as a standalone inspection
+  *    query over the shared `probeRows` expansion;
   *  - a pair qualifies when the two ids share a (table, bucket) key
   *    and at least one side is a HOME row (own bucket, not a probe) —
   *    i.e. bucket Hamming distance <= 1 in some table (at full nProbe).
@@ -39,7 +37,7 @@ import org.apache.spark.sql.functions._
   */
 object EmbeddingDedup {
 
-  /** Slim (tbl, bucket, id, home) rows: the home bucket per table plus
+  /** Slim (tbl, bucket, id, tag) rows: the home bucket per table plus
     * the `nProbe` 1-bit probe buckets flipping the least-confident
     * planes (ties broken by plane index — deterministic). Vectors are
     * hashed by DIRECTION, centered on the normalized-corpus mean (see
@@ -47,7 +45,8 @@ object EmbeddingDedup {
     * while all-positive embedding families (ReLU features, count
     * vectors, luma bands) no longer collapse into orthant mega-buckets
     * that the cap would then drop wholesale — the silent-recall-loss
-    * twin of the Probe19 quadratic-join finding.
+    * twin of the Probe19 quadratic-join finding. `tag` is 1 on a home
+    * row, 0 on a probe row.
     */
   private def probeRows(spark: SparkSession, corpus: DataFrame, dim: Int,
       nTables: Int, nPlanes: Int, nProbe: Int, seed: Long,
@@ -84,10 +83,21 @@ object EmbeddingDedup {
             if (nProbe >= nPlanes) 0 until nPlanes
             else (0 until nPlanes)
               .sortBy(p => (math.abs(dots(p)), p)).take(nProbe)
-          Iterator((ti, b, id, true)) ++
-            flips.iterator.map(p => (ti, b ^ (1 << p), id, false))
+          Iterator((ti, b, id, 1L)) ++
+            flips.iterator.map(p => (ti, b ^ (1 << p), id, 0L))
         }
-      }.toDF("tbl", "bucket", "id", "home")
+      }.toDF("tbl", "bucket", "id", "tag")
+  }
+
+  /** nProbe = -1 means "all planes" — tracks nPlanes so a caller
+    * raising nPlanes keeps the full Hamming<=1 guarantee; other
+    * negatives are rejected (a typo must not silently buy maximum-cost
+    * full probing).
+    */
+  private def probeCount(nProbe: Int, nPlanes: Int): Int = {
+    require(nProbe == -1 || (nProbe >= 0 && nProbe <= nPlanes),
+      "nProbe in [0, nPlanes], or -1 for all planes")
+    if (nProbe == -1) nPlanes else nProbe
   }
 
   /** Input: (id: Long, vec: array<float>). Output (id_a, id_b) pairs
@@ -99,17 +109,11 @@ object EmbeddingDedup {
       bucketCap: Int = 256, seed: Long = 42L, nProbe: Int = -1,
       ledger: Observation = null): DataFrame = {
     import spark.implicits._
-    // nProbe = -1 (default) means "all planes" — tracks nPlanes so a
-    // caller raising nPlanes keeps the full Hamming<=1 guarantee;
-    // other negatives are rejected (a typo must not silently buy
-    // maximum-cost full probing)
-    require(nProbe == -1 || (nProbe >= 0 && nProbe <= nPlanes),
-      "nProbe in [0, nPlanes], or -1 for all planes")
-    val probes = if (nProbe == -1) nPlanes else nProbe
+    val probes = probeCount(nProbe, nPlanes)
     // probe rows are consumed twice (bucket-count pass + bucket join);
     // the flatMap behind them normalizes and projects every vector on
     // nTables x nPlanes hyperplanes — localCheckpoint materializes the
-    // slim (tbl, bucket, id, home) rows once instead of re-hashing the
+    // slim (tbl, bucket, id, tag) rows once instead of re-hashing the
     // corpus per consumer (the MinHashDedup band-rows discipline), and
     // the corpus is spread first so a narrow scan cannot serialize the
     // hashing pass on 1-2 cores
@@ -118,27 +122,11 @@ object EmbeddingDedup {
       seed, Ann.corpusCenter(corpus, dim))
       .localCheckpoint()
 
-    // count pass first: degenerate buckets pruned before materializing;
-    // the optional ledger observes the drops on this same pass
-    val keptKeys = MinHashDedup.observeDrops(
-      rows.groupBy($"tbl", $"bucket").agg(count(lit(1)).as("n")),
-      bucketCap, ledger)
-      .filter($"n" > 1 && $"n" <= bucketCap)
-      .select($"tbl", $"bucket")
-
-    val buckets = rows.join(keptKeys, Seq("tbl", "bucket"))
-      .groupBy($"tbl", $"bucket")
-      .agg(collect_list(struct($"id", $"home")).as("xs"))
-
     // pairs need >= 1 home side (probe-probe would mean Hamming 2)
-    val pairs = buckets.select(explode(expr(
-      """filter(
-           flatten(transform(xs, (x, i) ->
-             transform(slice(xs, i + 2, size(xs)), y ->
-               struct(least(x.id, y.id) AS a, greatest(x.id, y.id) AS b,
-                      x.home OR y.home AS anyhome)))),
-           p -> p.a <> p.b AND p.anyhome)""")).as("p"))
-      .select($"p.a".as("id_a"), $"p.b".as("id_b"))
+    val pairs = CappedBuckets.selfPairs(rows, Seq("tbl", "bucket"),
+        bucketCap, ledger)
+      .filter($"tag_a" === 1L || $"tag_b" === 1L)
+      .select($"id_a", $"id_b")
       .distinct()
 
     // exact verification on candidates only: join the (small) pair set
@@ -160,14 +148,8 @@ object EmbeddingDedup {
     */
   def oversizedBuckets(spark: SparkSession, corpus: DataFrame, dim: Int,
       nTables: Int = 4, nPlanes: Int = 16, bucketCap: Int = 256,
-      seed: Long = 42L, nProbe: Int = -1): DataFrame = {
-    import spark.implicits._
-    require(nProbe == -1 || (nProbe >= 0 && nProbe <= nPlanes),
-      "nProbe in [0, nPlanes], or -1 for all planes")
-    probeRows(spark, corpus, dim, nTables, nPlanes,
-      if (nProbe == -1) nPlanes else nProbe, seed,
-      Ann.corpusCenter(corpus, dim))
-      .groupBy($"tbl", $"bucket").agg(count(lit(1)).as("n"))
-      .filter($"n" > bucketCap)
-  }
+      seed: Long = 42L, nProbe: Int = -1): DataFrame =
+    CappedBuckets.oversized(probeRows(spark, corpus, dim, nTables,
+      nPlanes, probeCount(nProbe, nPlanes), seed,
+      Ann.corpusCenter(corpus, dim)), Seq("tbl", "bucket"), bucketCap)
 }

@@ -11,13 +11,11 @@ import org.apache.spark.sql.functions._
   *    doc, not per shingle row);
   *  - candidate generation shuffles only (band_idx, band_hash, id) —
   *    slim rows — and self-joins within buckets, never the corpus;
-  *  - bucket sizes are measured FIRST with a count-only aggregation
-  *    (constant memory per group); buckets larger than `bucketCap` are
-  *    pruned BEFORE any collect_list materializes them, so a degenerate
-  *    bucket (millions of near-empty docs sharing a band hash) never
-  *    builds a multi-million-element aggregation buffer. Dropped buckets
-  *    are observable via `oversizedBuckets` (same inputs -> the pruned
-  *    (band, bh, n) keys) for lineage/recall accounting;
+  *  - buckets larger than `bucketCap` are pruned by a count-only pass
+  *    BEFORE any collect_list materializes them (CappedBuckets, shared
+  *    with SimHash, EmbeddingDedup and Ann). Dropped buckets are
+  *    observable via `ledger` or `oversizedBuckets` (same inputs -> the
+  *    pruned (band, bh, n) keys) for lineage/recall accounting;
   *  - exact verification recomputes shingles ONLY for docs that appear
   *    in a candidate pair (semi-join on id), so corpus-wide shingle
   *    sets (~8x text size for char-8-grams) never shuffle;
@@ -53,95 +51,12 @@ object MinHashDedup {
     h
   }
 
-  /** Char n-grams as 64-bit hashes (set semantics) — the n-gram
-    * Jaccard flavor of near-dup detection. Texts shorter than n have
-    * no shingles (degenerate-input rule). The FNV fold runs directly
-    * over the char window — same value as hashString(substring) with
-    * zero per-position String allocations (one hash per CHARACTER
-    * position makes this the hottest shingler; guide §1.2 step 2).
-    */
-  def charNgrams(text: String, n: Int): Set[Long] = {
-    if (text.length < n) Set.empty
-    else {
-      val out = Set.newBuilder[Long]
-      var i = 0
-      while (i + n <= text.length) {
-        var h = 0xCBF29CE484222325L
-        var j = i
-        val end = i + n
-        while (j < end) {
-          h ^= text.charAt(j)
-          h *= 0x100000001B3L
-          j += 1
-        }
-        out += h
-        i += 1
-      }
-      out.result()
-    }
-  }
-
-  /** Word k-shingles as 64-bit hashes (set semantics). Texts with fewer
-    * than k (non-empty) tokens have no shingles (degenerate-input rule).
-    * The FNV fold runs word-by-word with the ' ' separator folded in
-    * between — the same value as hashString(slice.mkString(" ")) with
-    * no per-position slice/joined-string allocations (this hash runs
-    * once per token position on every corpus pass; guide step 2).
-    */
-  def shingles(text: String, k: Int): Set[Long] = {
-    val ws = text.split(' ').filter(_.nonEmpty)
-    if (ws.length < k) Set.empty
-    else {
-      val out = Set.newBuilder[Long]
-      var i = 0
-      while (i + k <= ws.length) {
-        var h = 0xCBF29CE484222325L
-        var wi = i
-        while (wi < i + k) {
-          if (wi > i) {
-            h ^= ' '
-            h *= 0x100000001B3L
-          }
-          val w = ws(wi)
-          var j = 0
-          while (j < w.length) {
-            h ^= w.charAt(j)
-            h *= 0x100000001B3L
-            j += 1
-          }
-          wi += 1
-        }
-        out += h
-        i += 1
-      }
-      out.result()
-    }
-  }
-
-  /** MinHash signature: perm i = min over shingles of mix64(h ^ seed_i).
-    * seed_i = mix64(seed + i) is hoisted out of the shingle loop — the
-    * previous form recomputed it per (shingle, perm), doubling the
-    * mix64 count of the hottest inner loop in every near-dup pass.
-    */
-  def signature(sh: Set[Long], numPerm: Int, seed: Long): Array[Long] = {
-    val seeds = Array.tabulate(numPerm)(i => mix64(seed + i))
-    val sig = Array.fill(numPerm)(Long.MaxValue)
-    for (h <- sh) {
-      var i = 0
-      while (i < numPerm) {
-        val v = mix64(h ^ seeds(i))
-        if (v < sig(i)) sig(i) = v
-        i += 1
-      }
-    }
-    sig
-  }
-
-  /** Signature over a primitive shingle array (distinctness assumed —
-    * a duplicate element cannot change a min anyway). Same values as
-    * signature(Set); the array path is what the engine's hot loops use
-    * (an immutable Set[Long] boxes every element and its iteration
-    * dominates the signing pass at scale).
+  /** MinHash signature over a primitive shingle array: perm i = min
+    * over shingles of mix64(h ^ seed_i), with seed_i = mix64(seed + i)
+    * hoisted out of the shingle loop (distinctness assumed — a
+    * duplicate element cannot change a min anyway). Primitive arrays,
+    * not Set[Long]: a Set boxes every element and its iteration
+    * dominates the signing pass at scale.
     */
   private[ops] def signatureArr(sh: Array[Long], numPerm: Int,
       seed: Long): Array[Long] = {
@@ -176,8 +91,11 @@ object MinHashDedup {
     java.util.Arrays.copyOf(a, w)
   }
 
-  /** Allocation/boxing-free twin of shingles(): SORTED-DISTINCT word
-    * k-shingle hashes as a primitive array (same FNV values).
+  /** Word k-shingles as SORTED-DISTINCT 64-bit hashes. Texts with
+    * fewer than k (non-empty) tokens have no shingles (degenerate-input
+    * rule). The FNV fold runs word-by-word with the ' ' separator
+    * folded in between — the same value as hashString(slice.mkString(" "))
+    * with no per-position slice/joined-string allocations.
     */
   private[ops] def shinglesArr(text: String, k: Int): Array[Long] = {
     val ws = text.split(' ').filter(_.nonEmpty)
@@ -207,8 +125,10 @@ object MinHashDedup {
     sortedDistinct(out, out.length)
   }
 
-  /** Allocation/boxing-free twin of charNgrams(): SORTED-DISTINCT char
-    * n-gram hashes as a primitive array (same FNV values).
+  /** Char n-grams as SORTED-DISTINCT 64-bit hashes — the n-gram
+    * Jaccard flavor of near-dup detection. Texts shorter than n have no
+    * shingles (degenerate-input rule). The FNV fold runs directly over
+    * the char window: hashString(substring) without the substring.
     */
   private[ops] def charNgramsArr(text: String, n: Int): Array[Long] = {
     if (text.length < n) return Array.emptyLongArray
@@ -228,12 +148,6 @@ object MinHashDedup {
       i += 1
     }
     sortedDistinct(out, m)
-  }
-
-  def exactJaccard(a: Set[Long], b: Set[Long]): Double = {
-    if (a.isEmpty && b.isEmpty) return 1.0
-    val inter = a.intersect(b).size
-    inter.toDouble / (a.size + b.size - inter)
   }
 
   /** Exact Jaccard by linear merge over SORTED distinct-element arrays
@@ -282,27 +196,17 @@ object MinHashDedup {
     }.toDF("band", "bh", "id")
   }
 
-  /** Resolve to the SORTED-DISTINCT primitive-array shingler the hot
-    * loops run on: a caller-supplied Set shingler is adapted (same
-    * value set — min-signatures and sorted-merge jaccard are container-
-    * agnostic), the defaults use the allocation-free array twins.
-    * Well-known Set shinglers are rebound to their array twins so the
-    * public API keeps its shape while the hot path stays unboxed.
-    */
-  private def resolveShingler(shingler: String => Set[Long],
-      shingleK: Int): String => Array[Long] =
-    if (shingler != null) { s =>
-      val a = shingler(s).toArray
-      java.util.Arrays.sort(a)
-      a
-    }
-    else shinglesArr(_, shingleK)
-
-  /** Char-n-gram array shingler for nearDuplicates' `shinglerArr`
-    * param — the boxing-free form of `charNgrams(_, n)`.
-    */
+  /** Char-n-gram shingler for the `shingler` parameter. */
   def charNgramShingler(n: Int): String => Array[Long] =
     charNgramsArr(_, n)
+
+  /** `shingler` (it MUST return SORTED-DISTINCT hashes, as
+    * `shinglesArr` and `charNgramShingler` do: the verify step merges
+    * them), or word `shingleK`-shingles when it is null.
+    */
+  private def shinglerOr(shingler: String => Array[Long],
+      shingleK: Int): String => Array[Long] =
+    if (shingler != null) shingler else shinglesArr(_, shingleK)
 
   /** Repartition a corpus to the session's default parallelism when its
     * scan is NARROWER than that — the guide §2.5 input-skew rule (one
@@ -311,6 +215,11 @@ object MinHashDedup {
     * the whole signing pass on one or two cores while 30 sit idle. At
     * production scale the scan has >= cores splits and this is a no-op
     * (the condition, not the repartition, is what makes it scale-safe).
+    *
+    * Precondition: `ds` is scan-rooted or cached, as every caller's is.
+    * The width probe reads `ds.rdd`, which finalizes an adaptive plan:
+    * over a shuffled input it would run every upstream shuffle stage
+    * now and again when the real query executes.
     */
   private[ops] def spreadIfNarrow[T](ds: Dataset[T]): Dataset[T] = {
     val p = ds.sparkSession.sparkContext.defaultParallelism
@@ -329,8 +238,8 @@ object MinHashDedup {
     */
   def bandIndex(spark: SparkSession, docs: Dataset[(Long, String)],
       shingleK: Int = 3, numPerm: Int = 64, bands: Int = 16,
-      shingler: String => Set[Long] = null): DataFrame =
-    bandRows(spark, docs, resolveShingler(shingler, shingleK),
+      shingler: String => Array[Long] = null): DataFrame =
+    bandRows(spark, docs, shinglerOr(shingler, shingleK),
       numPerm, bands, 42L)
 
   /** Incremental near-dup: a NEW batch against a HISTORICAL corpus via
@@ -347,17 +256,15 @@ object MinHashDedup {
       newDocs: Dataset[(Long, String)], shingleK: Int = 3,
       numPerm: Int = 64, bands: Int = 16, threshold: Double = 0.8,
       bucketCap: Int = 64,
-      shingler: String => Set[Long] = null): DataFrame = {
+      shingler: String => Array[Long] = null): DataFrame = {
     import spark.implicits._
     require(numPerm % bands == 0, "numPerm must divide into bands")
-    val mk = resolveShingler(shingler, shingleK)
+    val mk = shinglerOr(shingler, shingleK)
     val newSpread = spreadIfNarrow(newDocs)
     val newBands = bandRows(spark, newSpread, mk, numPerm, bands, 42L)
     val keptOld = oldIndex
-      .join(oldIndex.groupBy($"band", $"bh")
-          .agg(count(lit(1)).as("n"))
-          .filter($"n" <= bucketCap).select($"band", $"bh"),
-        Seq("band", "bh"))
+      .join(CappedBuckets.kept(oldIndex, Seq("band", "bh"), bucketCap,
+        null), Seq("band", "bh"))
       .withColumnRenamed("id", "old_id")
     // candidate pairs feed THREE consumers (both semi-joins + the final
     // verify join); materialize the slim id pairs once so the bucket
@@ -394,32 +301,6 @@ object MinHashDedup {
       .select($"old_id", $"new_id", round($"jaccard", 4).as("jaccard"))
   }
 
-  /** Attach the single-pass recall ledger to a bucket-count DataFrame:
-    * the SAME count aggregation that prunes degenerate buckets also
-    * observes how many buckets/rows the cap dropped, so production runs
-    * get recall-loss accounting for free (no second signature pass).
-    * Read `ledger.get` after the first action on the returned plan:
-    * keys `dropped_buckets`, `dropped_rows`.
-    *
-    * Caveat (verified behavior on Spark 4): if NO bucket survives the
-    * prune (zero candidate buckets at all), AQE's empty-relation
-    * propagation replaces the downstream join — including this metrics
-    * node — with an empty relation, and `ledger.get` returns an EMPTY
-    * map rather than zeros. Semantics for callers: a populated map is
-    * the exact drop count; an empty map means "no kept buckets" —
-    * consult `oversizedBuckets` for the breakdown in that (degenerate,
-    * result-set-empty-anyway) case.
-    */
-  private[ops] def observeDrops(counts: DataFrame, bucketCap: Int,
-      ledger: Observation): DataFrame = {
-    import counts.sparkSession.implicits._
-    if (ledger == null) counts
-    else counts.observe(ledger,
-      count(when($"n" > bucketCap, lit(1))).alias("dropped_buckets"),
-      coalesce(sum(when($"n" > bucketCap, $"n")), lit(0L))
-        .alias("dropped_rows"))
-  }
-
   /** Buckets pruned by the cap, i.e. (band, bh, n) with n > bucketCap —
     * the recall-loss ledger for degenerate content. Count/inspect this
     * alongside `nearDuplicates` on the same inputs.
@@ -427,36 +308,27 @@ object MinHashDedup {
   def oversizedBuckets(spark: SparkSession, docs: Dataset[(Long, String)],
       shingleK: Int = 3, numPerm: Int = 64, bands: Int = 16,
       bucketCap: Int = 64,
-      shingler: String => Set[Long] = null): DataFrame = {
-    import spark.implicits._
-    bandRows(spark, docs, resolveShingler(shingler, shingleK),
-      numPerm, bands, 42L)
-      .groupBy($"band", $"bh").agg(count(lit(1)).as("n"))
-      .filter($"n" > bucketCap)
-  }
+      shingler: String => Array[Long] = null): DataFrame =
+    CappedBuckets.oversized(bandIndex(spark, docs, shingleK, numPerm,
+      bands, shingler), Seq("band", "bh"), bucketCap)
 
   /** Candidate pairs with exact Jaccard >= threshold.
     *
     * Input: (id: Long, text: String). Output: (id_a, id_b, jaccard)
     * with id_a < id_b, jaccard rounded to 4 decimals for cross-engine
-    * comparability. `shinglerArr` is the boxing-free custom-shingler
-    * form (MUST return SORTED-DISTINCT hashes — charNgramShingler
-    * does); `shingler` (Set) remains for compatibility and is adapted.
+    * comparability. `shingler` replaces the word shingles (SORTED-
+    * DISTINCT hashes, e.g. `charNgramShingler`). `ledger` (if given)
+    * observes the dropped bucket/row counts on the bucket-count pass
+    * (see CappedBuckets).
     */
   def nearDuplicates(spark: SparkSession, docs: Dataset[(Long, String)],
       shingleK: Int = 3, numPerm: Int = 64, bands: Int = 16,
       threshold: Double = 0.8, bucketCap: Int = 64,
-      shingler: String => Set[Long] = null,
-      ledger: Observation = null,
-      shinglerArr: String => Array[Long] = null): DataFrame = {
+      shingler: String => Array[Long] = null,
+      ledger: Observation = null): DataFrame = {
     import spark.implicits._
     require(numPerm % bands == 0, "numPerm must divide into bands")
-    require(shingler == null || shinglerArr == null,
-      "pass shingler OR shinglerArr, not both")
-    val seed = 42L
-    val mk =
-      if (shinglerArr != null) shinglerArr
-      else resolveShingler(shingler, shingleK)
+    val mk = shinglerOr(shingler, shingleK)
 
     // band rows are consumed TWICE (bucket-count pass + bucket join);
     // without materialization the shingle+signature flatMap — the
@@ -466,30 +338,12 @@ object MinHashDedup {
     // production run persists bandIndex to a table instead). The
     // corpus is spread first so the signing pass uses every core.
     val docsSpread = spreadIfNarrow(docs)
-    val bandsDf = bandRows(spark, docsSpread, mk, numPerm, bands, seed)
+    val bandsDf = bandRows(spark, docsSpread, mk, numPerm, bands, 42L)
       .localCheckpoint()
 
-    // count pass first: a degenerate bucket is pruned as one (band, bh,
-    // n) row, never materialized as a list; `ledger` (if given) observes
-    // the dropped bucket/row counts on this same pass — recall loss is
-    // visible without re-running the signature stage
-    val keptKeys = observeDrops(
-      bandsDf.groupBy($"band", $"bh").agg(count(lit(1)).as("n")),
-      bucketCap, ledger)
-      .filter($"n" > 1 && $"n" <= bucketCap)
-      .select($"band", $"bh")
-
-    val buckets = bandsDf.join(keptKeys, Seq("band", "bh"))
-      .groupBy($"band", $"bh")
-      .agg(collect_list($"id").as("ids")) // size bounded by bucketCap
-
-    val pairs = buckets.select(explode(expr(
-      """filter(
-           flatten(transform(ids, (x, i) ->
-             transform(slice(ids, i + 2, size(ids)), y ->
-               struct(least(x, y) AS a, greatest(x, y) AS b)))),
-           p -> p.a <> p.b)""")).as("p"))
-      .select($"p.a".as("id_a"), $"p.b".as("id_b"))
+    val pairs = CappedBuckets.selfPairs(bandsDf.withColumn("tag", lit(0L)),
+        Seq("band", "bh"), bucketCap, ledger)
+      .select($"id_a", $"id_b")
       .distinct()
 
     // exact verification: recompute shingles ONLY for candidate docs

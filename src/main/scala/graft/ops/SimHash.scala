@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** SimHash near-dup detection: 64-bit token-weighted fingerprint +
   * pigeonhole blocking for Hamming-distance candidate search.
@@ -34,6 +33,7 @@ object SimHash {
 
   def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 
+  /** Slim (blk, bv, id, tag) rows, tag = the doc's simhash. */
   private def blockRows(spark: SparkSession,
       docs: Dataset[(Long, String)], nBlocks: Int): DataFrame = {
     import spark.implicits._
@@ -46,62 +46,39 @@ object SimHash {
           val mask = if (w == 64) -1L else (1L << w) - 1L
           (b, (h >>> lo) & mask, id, h)
         }
-      }.toDF("blk", "bv", "id", "h")
+      }.toDF("blk", "bv", "id", "tag")
   }
 
   /** Buckets pruned by the cap — the recall-loss ledger (see
     * MinHashDedup.oversizedBuckets).
     */
   def oversizedBuckets(spark: SparkSession, docs: Dataset[(Long, String)],
-      maxDist: Int = 3, bucketCap: Int = 64): DataFrame = {
-    import spark.implicits._
-    blockRows(spark, docs, maxDist + 1)
-      .groupBy($"blk", $"bv").agg(count(lit(1)).as("n"))
-      .filter($"n" > bucketCap)
-  }
+      maxDist: Int = 3, bucketCap: Int = 64): DataFrame =
+    CappedBuckets.oversized(blockRows(spark, docs, maxDist + 1),
+      Seq("blk", "bv"), bucketCap)
 
   /** Pairs with Hamming(simhash) <= maxDist; id_a < id_b. `ledger` (if
     * given) observes dropped bucket/row counts on the same count pass
-    * (see MinHashDedup.observeDrops).
+    * (see CappedBuckets).
     */
   def nearDuplicates(spark: SparkSession, docs: Dataset[(Long, String)],
       maxDist: Int = 3, bucketCap: Int = 64,
       ledger: Observation = null): DataFrame = {
     import spark.implicits._
-    val nBlocks = maxDist + 1
-
     // simhashing is one mix64+64-bit vote per token — spread a narrow
     // scan so it parallelizes, and materialize the slim block rows
     // once for their two consumers (count pass + bucket join), the
     // MinHashDedup band-rows discipline
     val blocks = blockRows(spark,
-      MinHashDedup.spreadIfNarrow(docs), nBlocks)
+      MinHashDedup.spreadIfNarrow(docs), maxDist + 1)
       .localCheckpoint()
 
-    // count pass first, so a degenerate bucket (e.g. millions of docs
-    // sharing a simhash block) is pruned as one (blk, bv, n) row and
-    // never materialized in a collect_list aggregation buffer
-    val keptKeys = MinHashDedup.observeDrops(
-      blocks.groupBy($"blk", $"bv").agg(count(lit(1)).as("n")),
-      bucketCap, ledger)
-      .filter($"n" > 1 && $"n" <= bucketCap)
-      .select($"blk", $"bv")
-
-    val buckets = blocks.join(keptKeys, Seq("blk", "bv"))
-      .groupBy($"blk", $"bv")
-      .agg(collect_list(struct($"id", $"h")).as("xs")) // <= bucketCap
-
-    buckets.select(explode(expr(
-      """flatten(transform(xs, (x, i) ->
-           transform(slice(xs, i + 2, size(xs)), y ->
-             struct(least(x.id, y.id) AS a, greatest(x.id, y.id) AS b,
-                    if(x.id <= y.id, x.h, y.h) AS ha,
-                    if(x.id <= y.id, y.h, x.h) AS hb))))""")).as("p"))
-      .select($"p.a".as("id_a"), $"p.b".as("id_b"), $"p.ha", $"p.hb")
+    // the pair tags are the two simhashes: verify on them directly
+    CappedBuckets.selfPairs(blocks, Seq("blk", "bv"), bucketCap, ledger)
       .distinct()
       .as[(Long, Long, Long, Long)]
       .map { case (a, b, ha, hb) => (a, b, hamming(ha, hb)) }
       .toDF("id_a", "id_b", "dist")
-      .filter($"dist" <= maxDist && $"id_a" =!= $"id_b")
+      .filter($"dist" <= maxDist)
   }
 }

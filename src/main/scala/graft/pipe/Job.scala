@@ -32,17 +32,6 @@ import org.apache.spark.util.CollectionAccumulator
   */
 object Job {
 
-  /** Explicit salted repartition for conv_id-clustered inputs: hash on
-    * (conv_id, turn_idx % salt) so one mega-conversation lands on `salt`
-    * different reducers. NOTE: not dedupe-safe (duplicate rows of one
-    * turn stay together only within a salt residue — fine, identical
-    * turn_idx => identical residue).
-    */
-  def saltedRepartition(ds: Dataset[Turn], partitions: Int,
-      salt: Int): Dataset[Turn] =
-    ds.repartition(partitions, col("conv_id"),
-      pmod(col("turn_idx"), lit(salt)))
-
   /** Exact-dup rank over md5(`key`) computed on a SLIM projection: only
     * (hash, order cols) enter the window exchange — the payload column
     * (typically extracted text) never enters the window operator's sort

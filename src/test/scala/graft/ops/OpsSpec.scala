@@ -7,17 +7,28 @@ import org.scalatest.funsuite.AnyFunSuite
 class MinHashDedupSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
+  /** Set-based exact Jaccard: the reference jaccardSorted is checked
+    * against.
+    */
+  private def exactJaccard(a: Set[Long], b: Set[Long]): Double = {
+    if (a.isEmpty && b.isEmpty) return 1.0
+    val inter = a.intersect(b).size
+    inter.toDouble / (a.size + b.size - inter)
+  }
+
+  private def shingleSet(t: String) = MinHashDedup.shinglesArr(t, 3).toSet
+
   test("shingles and exact jaccard") {
-    val a = MinHashDedup.shingles("a b c d e", 3)
+    val a = shingleSet("a b c d e")
     assert(a.size == 3)
-    assert(MinHashDedup.exactJaccard(a, a) == 1.0)
-    val b = MinHashDedup.shingles("a b c d x", 3)
+    assert(exactJaccard(a, a) == 1.0)
+    val b = shingleSet("a b c d x")
     // shared: "a b c", "b c d"; union size 4
-    assert(MinHashDedup.exactJaccard(a, b) == 0.5)
+    assert(exactJaccard(a, b) == 0.5)
     // degenerate-input rule: fewer than k tokens -> no shingles
-    assert(MinHashDedup.shingles("a b", 3).isEmpty)
-    assert(MinHashDedup.shingles("", 3).isEmpty)
-    assert(MinHashDedup.charNgrams("abc", 8).isEmpty)
+    assert(MinHashDedup.shinglesArr("a b", 3).isEmpty)
+    assert(MinHashDedup.shinglesArr("", 3).isEmpty)
+    assert(MinHashDedup.charNgramsArr("abc", 8).isEmpty)
   }
 
   test("jaccardSorted (merge) agrees with the Set formulation") {
@@ -27,7 +38,7 @@ class MinHashDedupSpec extends AnyFunSuite {
       val b = (0 until r.nextInt(30)).map(_ => r.nextInt(40).toLong).toSet
       val merged = MinHashDedup.jaccardSorted(
         a.toArray.sorted.toIndexedSeq, b.toArray.sorted.toIndexedSeq)
-      assert(merged == MinHashDedup.exactJaccard(a, b), (a, b))
+      assert(merged == exactJaccard(a, b), (a, b))
     }
     assert(MinHashDedup.jaccardSorted(IndexedSeq.empty,
       IndexedSeq.empty) == 1.0)
@@ -39,11 +50,10 @@ class MinHashDedupSpec extends AnyFunSuite {
     val near = base + " tail1 tail2"
     val far = (0 until 60).map(_ => s"v${r.nextInt(1000)}").mkString(" ")
     def sig(t: String) =
-      MinHashDedup.signature(MinHashDedup.shingles(t, 3), 128, 42L)
+      MinHashDedup.signatureArr(MinHashDedup.shinglesArr(t, 3), 128, 42L)
     def est(a: Array[Long], b: Array[Long]) =
       a.zip(b).count { case (x, y) => x == y } / 128.0
-    val jNear = MinHashDedup.exactJaccard(
-      MinHashDedup.shingles(base, 3), MinHashDedup.shingles(near, 3))
+    val jNear = exactJaccard(shingleSet(base), shingleSet(near))
     assert(math.abs(est(sig(base), sig(near)) - jNear) < 0.15)
     assert(est(sig(base), sig(far)) < 0.15)
   }

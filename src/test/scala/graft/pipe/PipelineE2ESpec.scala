@@ -172,8 +172,12 @@ class SkewSpec extends AnyFunSuite {
 
   test("mega-conversation output correct through salted repartition") {
     import spark.implicits._
+    import org.apache.spark.sql.functions.{lit, pmod}
     val input = GoldenData.skewTurns
-    val ds = Job.saltedRepartition(spark.createDataset(input), 8, 8)
+    // salted on (conv_id, turn_idx % 8): one mega-conversation lands on
+    // 8 different reducers
+    val ds = spark.createDataset(input).repartition(8, $"conv_id",
+      pmod($"turn_idx", lit(8)))
     // salting spreads the 10^4-turn conversation over >1 partition
     val partSizes = ds.mapPartitions(it => Iterator(it.size)).collect()
     assert(partSizes.count(_ > 0) > 1)
