@@ -120,7 +120,7 @@ object Clusters {
     * clusters), and each distributed round costs ~4 shuffle stages plus
     * a checkpoint action; for a graph whose edge list fits comfortably
     * in the same memory budget Spark grants a broadcast-join relation,
-    * a single collect + union-find + broadcast label join replaces
+    * a single collect + union-find + one label aggregate replaces
     * O(log^2 n) such rounds. 4M edges = 64 MB of (u, v) longs — the
     * same order as a default broadcast relation; beyond the bound the
     * star-contraction path runs unchanged. Override with
@@ -210,17 +210,17 @@ object Clusters {
     if (nRaw <= localSolveMaxEdges) {
       // LOCAL SOLVE: the raw pair list (dups/self-loops included —
       // union-find absorbs both) is bounded, so label it on the driver
-      // and attach labels with one broadcast join. Replaces the whole
-      // O(log^2 n)-round loop: 1 job instead of ~4 stages/round.
-      // Self-loops stay in: an id seen only in (a, a) pairs is a
-      // singleton the distributed path's vertex closure keeps too
+      // and attach labels with one aggregate over vertices (null comp)
+      // and labels: max(comp) per id is the label or null, so
+      // coalesce gives singletons themselves (null ids stay one null
+      // row) — one exchange.
+      // Replaces the whole O(log^2 n)-round loop. Self-loops stay in:
+      // an id seen only in (a, a) pairs is a singleton the distributed
+      // path's vertex closure keeps too
       val labels = unionFindLabels(raw.as[(Long, Long)].collect())
-      val labelDf = spark.createDataset(labels.toSeq)
-        .toDF("id", "comp")
-      vertices.select($"id")
-        .union(labelDf.select($"id"))
-        .distinct()
-        .join(broadcast(labelDf), Seq("id"), "left_outer")
+      vertices.select($"id", lit(null).cast("long").as("comp"))
+        .union(spark.createDataset(labels.toSeq).toDF("id", "comp"))
+        .groupBy($"id").agg(max($"comp").as("comp"))
         .select($"id", coalesce($"comp", $"id").as("comp"))
     } else {
       // the vertex set is CLOSED over the pair ids: an id that appears

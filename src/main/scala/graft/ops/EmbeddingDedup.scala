@@ -20,8 +20,8 @@ import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
   *    near-neighbor is most likely to disagree on), the standard
   *    multi-probe ordering, so recall degrades gracefully as nProbe
   *    shrinks (measured curve in BENCH/BASELINE.md);
-  *  - buckets over `bucketCap` are pruned by a count-only pass BEFORE
-  *    any collect_list (CappedBuckets); passing `ledger` observes the
+  *  - buckets over `bucketCap` are pruned inside the bounded-member
+  *    bucket aggregate (CappedBuckets); passing `ledger` observes the
   *    dropped bucket/row counts on that SAME pass (no second signature
   *    sweep) — `oversizedBuckets` remains as a standalone inspection
   *    query over the shared `probeRows` expansion;
@@ -110,11 +110,11 @@ object EmbeddingDedup {
       ledger: Observation = null): DataFrame = {
     import spark.implicits._
     val probes = probeCount(nProbe, nPlanes)
-    // probe rows are consumed twice (bucket-count pass + bucket join);
-    // the flatMap behind them normalizes and projects every vector on
-    // nTables x nPlanes hyperplanes — localCheckpoint materializes the
-    // slim (tbl, bucket, id, tag) rows once instead of re-hashing the
-    // corpus per consumer (the MinHashDedup band-rows discipline), and
+    // the flatMap behind the probe rows normalizes and projects every
+    // vector on nTables x nPlanes hyperplanes — localCheckpoint
+    // materializes the slim (tbl, bucket, id, tag) rows once (the
+    // MinHashDedup band-rows discipline; their one consumer is the
+    // bucket aggregate), and
     // the corpus is spread first so a narrow scan cannot serialize the
     // hashing pass on 1-2 cores
     val rows = probeRows(spark, MinHashDedup.spreadIfNarrow(corpus),

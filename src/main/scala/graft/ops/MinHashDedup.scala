@@ -11,14 +11,16 @@ import org.apache.spark.sql.functions._
   *    doc, not per shingle row);
   *  - candidate generation shuffles only (band_idx, band_hash, id) —
   *    slim rows — and self-joins within buckets, never the corpus;
-  *  - buckets larger than `bucketCap` are pruned by a count-only pass
-  *    BEFORE any collect_list materializes them (CappedBuckets, shared
-  *    with SimHash, EmbeddingDedup and Ann). Dropped buckets are
+  *  - buckets larger than `bucketCap` are pruned inside the one
+  *    bounded-member bucket aggregate, which never holds more than
+  *    `bucketCap` members (CappedBuckets, shared with SimHash,
+  *    EmbeddingDedup and Ann). Dropped buckets are
   *    observable via `ledger` or `oversizedBuckets` (same inputs -> the
   *    pruned (band, bh, n) keys) for lineage/recall accounting;
   *  - exact verification recomputes shingles ONLY for docs that appear
-  *    in a candidate pair (semi-join on id), so corpus-wide shingle
-  *    sets (~8x text size for char-8-grams) never shuffle;
+  *    in a candidate pair (semi-join on id, read from the input, not
+  *    from the spread copy), so corpus-wide shingle sets (~8x text
+  *    size for char-8-grams) never shuffle;
   *  - exact Jaccard is the final arbiter: LSH affects recall only,
   *    never precision.
   *
@@ -275,9 +277,12 @@ object MinHashDedup {
       .select($"old_id", $"new_id")
       .distinct()
       .localCheckpoint()
+    // candidate docs are re-shingled from the input itself: the
+    // semi-join filters first, so spreading the whole history (or
+    // batch) again for a few candidates would only add an exchange
     def sortedShingles(docs: Dataset[(Long, String)],
         ids: DataFrame): DataFrame =
-      spreadIfNarrow(docs).toDF("id", "text")
+      docs.toDF("id", "text")
         .join(ids, Seq("id"), "left_semi")
         .as[(Long, String)]
         .map { case (id, text) => (id, mk(text).toSeq) }
@@ -318,8 +323,11 @@ object MinHashDedup {
     * with id_a < id_b, jaccard rounded to 4 decimals for cross-engine
     * comparability. `shingler` replaces the word shingles (SORTED-
     * DISTINCT hashes, e.g. `charNgramShingler`). `ledger` (if given)
-    * observes the dropped bucket/row counts on the bucket-count pass
+    * observes the dropped bucket/row counts on the bucket aggregate
     * (see CappedBuckets).
+    *
+    * Only the signing pass runs over a spread copy of `docs`; the
+    * verify step re-shingles the candidate docs straight from `docs`.
     */
   def nearDuplicates(spark: SparkSession, docs: Dataset[(Long, String)],
       shingleK: Int = 3, numPerm: Int = 64, bands: Int = 16,
@@ -330,13 +338,16 @@ object MinHashDedup {
     require(numPerm % bands == 0, "numPerm must divide into bands")
     val mk = shinglerOr(shingler, shingleK)
 
-    // band rows are consumed TWICE (bucket-count pass + bucket join);
-    // without materialization the shingle+signature flatMap — the
-    // CPU-dominant stage of the whole operator — re-executes per
-    // consumer. localCheckpoint keeps only the slim ~20-byte
-    // (band, bh, id) rows (the Ann.materializeSlim discipline; a
-    // production run persists bandIndex to a table instead). The
-    // corpus is spread first so the signing pass uses every core.
+    // band rows feed one bucket aggregate, but the candidate pairs
+    // behind it have three consumers (the candidate-id semi-join and
+    // both verify joins); without materialization the shingle+signature
+    // flatMap — the CPU-dominant stage of the whole operator — runs
+    // more than once (measured: dropping this checkpoint went back to
+    // the old job count and was no faster). localCheckpoint keeps only
+    // the slim ~20-byte (band, bh, id) rows (the Ann.materializeSlim
+    // discipline; a production run persists bandIndex to a table
+    // instead). The corpus is spread first so the signing pass uses
+    // every core.
     val docsSpread = spreadIfNarrow(docs)
     val bandsDf = bandRows(spark, docsSpread, mk, numPerm, bands, 42L)
       .localCheckpoint()
@@ -354,13 +365,15 @@ object MinHashDedup {
     val candIds = pairs
       .select(explode(array($"id_a", $"id_b")).as("id"))
     // shingle arrays are SORTED once per doc here, so the per-pair
-    // verify below is a linear merge (see jaccardSorted); the spread
-    // corpus keeps candidate re-shingling parallel on narrow scans.
-    // NOT localCheckpointed despite two consumers (id_a/id_b joins):
-    // measured +3 AQE jobs and no CPU win across the whole minhash
-    // family — the broadcast semi-join re-execution is cheaper than
-    // the extra materialization (the t_kmv_merge lesson again)
-    val sh = docsSpread.toDF("id", "text")
+    // verify below is a linear merge (see jaccardSorted). They are
+    // read from `docs`, not `docsSpread`: the semi-join filters first,
+    // so only candidate docs are re-shingled, and a second spread of
+    // the whole corpus would re-run its exchange for a few hundred of
+    // them. NOT localCheckpointed despite two consumers (id_a/id_b
+    // joins): measured +3 AQE jobs and no CPU win across the whole
+    // minhash family — the broadcast semi-join re-execution is cheaper
+    // than the extra materialization (the t_kmv_merge lesson again)
+    val sh = docs.toDF("id", "text")
       .join(candIds, Seq("id"), "left_semi")
       .as[(Long, String)]
       .map { case (id, text) => (id, mk(text).toSeq) }

@@ -113,6 +113,13 @@ object Retrieval {
     * neither hex-rendered into plan strings nor copied into every
     * stage's task binary. The handle lives as long as the returned
     * frame (the context cleaner drops it after that).
+    *
+    * The corpus is probed as given, with no width probe and no spread
+    * (unlike the other operators here): the probe is a one-pass byte
+    * kernel, and on a shuffled input (a semi-join of cached frames)
+    * the probe's `.rdd` would run the whole upstream once more only to
+    * learn its width, before a repartition exchange the real query
+    * then pays too.
     */
   def decontaminateBloom(spark: SparkSession, corpus: DataFrame,
       bench: DataFrame, n: Int = 13, m: Int = 32768, k: Int = 7)
@@ -126,10 +133,10 @@ object Retrieval {
       .head.getAs[Array[Byte]](0) // one m/8-byte row: scalar bootstrap
     val shipped = spark.sparkContext.broadcast(blob)
     // Once: the n_shared > 0 filter would otherwise be pushed below
-    // the spread exchange with the probe substituted into it — the
-    // probe then runs twice, and the pushed copy runs on the narrow
-    // scan (measured: 1.8 s single-task filter stage)
-    spreadBatch(corpus)
+    // any upstream exchange with the probe substituted into it — the
+    // probe then runs twice (measured: 1.8 s single-task filter stage
+    // below a spread exchange)
+    corpus
       .select($"doc_id",
         graft.functions.OnceOps.once(
           graft.functions.Bloom.gramHits(shipped, $"text", n, k))

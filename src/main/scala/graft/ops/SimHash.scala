@@ -58,7 +58,7 @@ object SimHash {
       Seq("blk", "bv"), bucketCap)
 
   /** Pairs with Hamming(simhash) <= maxDist; id_a < id_b. `ledger` (if
-    * given) observes dropped bucket/row counts on the same count pass
+    * given) observes dropped bucket/row counts on the bucket aggregate
     * (see CappedBuckets).
     */
   def nearDuplicates(spark: SparkSession, docs: Dataset[(Long, String)],
@@ -67,8 +67,8 @@ object SimHash {
     import spark.implicits._
     // simhashing is one mix64+64-bit vote per token — spread a narrow
     // scan so it parallelizes, and materialize the slim block rows
-    // once for their two consumers (count pass + bucket join), the
-    // MinHashDedup band-rows discipline
+    // once (the MinHashDedup band-rows discipline); their one consumer
+    // is the bucket aggregate
     val blocks = blockRows(spark,
       MinHashDedup.spreadIfNarrow(docs), maxDist + 1)
       .localCheckpoint()

@@ -119,9 +119,7 @@ object Winnow {
     // boilerplate guard: a fingerprint shared by > fpCap docs (site
     // chrome, license headers) would expand to > cap^2 pairs; dropping
     // it is DETERMINISTIC and mirrored by the oracle
-    val kept = fp.groupBy($"f").agg(count(lit(1)).as("docs"))
-      .filter($"docs" <= fpCap)
-      .select($"f")
+    val kept = CappedBuckets.kept(fp, Seq("f"), fpCap, null)
     val fpk = fp.join(kept, Seq("f"))
     val sizes = fpk.groupBy($"id").agg(count(lit(1)).as("n"))
     val shared = fpk.toDF("f", "id_a")
@@ -160,10 +158,7 @@ object Winnow {
     // containmentPairs corpus pass above keeps its spread)
     val fpH = index.toDF("f", "id")
     val fpN = fingerprintIndex(spark, newBatch, k, w)
-    val kept = fpH.union(fpN)
-      .groupBy($"f").agg(count(lit(1)).as("docs"))
-      .filter($"docs" <= fpCap)
-      .select($"f")
+    val kept = CappedBuckets.kept(fpH.union(fpN), Seq("f"), fpCap, null)
     val hk = fpH.join(kept, Seq("f"))
     val nk = fpN.join(kept, Seq("f"))
     val hSizes = hk.groupBy($"id").agg(count(lit(1)).as("n"))

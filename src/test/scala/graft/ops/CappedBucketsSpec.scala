@@ -2,6 +2,9 @@ package graft.ops
 
 import graft.pipe.SparkTestSession
 import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -117,6 +120,86 @@ class CappedBucketsSpec extends AnyFunSuite {
         case e: LambdaFunction => e
       }))
       assert(lambdas.isEmpty, plan.toString)
+    }
+  }
+
+  private val members = CappedMembers(BoundReference(0, LongType, false),
+    BoundReference(1, LongType, false), Cap)
+
+  private def held(b: MemberBuf): Seq[(Long, Long)] =
+    (0 until b.m).map(i => (b.xs(2 * i), b.xs(2 * i + 1)))
+
+  /** A partial buffer of the (id, id * 10) rows for `ids`. */
+  private def partial(ids: Seq[Long]): MemberBuf =
+    ids.foldLeft(members.createAggregationBuffer())((b, id) =>
+      members.update(b, InternalRow(id, id * 10)))
+
+  test("CappedMembers update, merge and serialize round trip") {
+    val a = members.deserialize(members.serialize(partial(Seq(1L, 2L))))
+    assert(a.n == 2 && held(a) == Seq((1L, 10L), (2L, 20L)))
+    val empty = members.deserialize(members.serialize(
+      members.createAggregationBuffer()))
+    assert(empty.n == 0 && held(empty).isEmpty)
+    val b = members.deserialize(members.serialize(
+      members.merge(partial(Seq(3L)), empty)))
+    val ab = members.merge(a, b)
+    assert(ab.n == 3 && held(ab) == Seq((1L, 10L), (2L, 20L), (3L, 30L)))
+    // a round trip after the cap keeps n and no members
+    val over = members.deserialize(members.serialize(
+      partial(1L to Cap + 3L)))
+    assert(over.n == Cap + 3 && held(over).isEmpty)
+    // eval: struct(n, [(id, tag)])
+    val out = members.eval(ab).asInstanceOf[InternalRow]
+    val xs = out.getArray(1)
+    assert(out.getLong(0) == 3L)
+    assert((0 until xs.numElements()).map { i =>
+      val m = xs.getStruct(i, 2)
+      (m.getLong(0), m.getLong(1))
+    } == held(ab))
+    assert(members.eval(over).asInstanceOf[InternalRow]
+      .getArray(1).numElements() == 0)
+  }
+
+  test("no CappedMembers buffer ever holds more than cap members") {
+    val r = new java.util.Random(31)
+    var (seenHeld, seenOver) = (false, false)
+    def check(b: MemberBuf): MemberBuf = {
+      assert(b.m <= Cap && b.xs.length <= 2 * Cap, (b.n, b.m))
+      assert(b.m == (if (b.n <= Cap) b.n else 0L), (b.n, b.m))
+      seenHeld ||= b.m > 1
+      seenOver ||= b.n > Cap
+      b
+    }
+    var pool = Vector.fill(8)(members.createAggregationBuffer())
+    for (_ <- 0 until 400) {
+      val i = r.nextInt(pool.length)
+      pool = r.nextInt(4) match {
+        case 0 => // merge two buffers, one through a round trip
+          val j = r.nextInt(pool.length)
+          val o = members.deserialize(members.serialize(pool(j)))
+          pool.updated(i, check(members.merge(pool(i), o)))
+            .updated(j, members.createAggregationBuffer())
+        case _ =>
+          pool.updated(i, check(members.update(pool(i),
+            InternalRow(r.nextLong(), r.nextLong()))))
+      }
+    }
+    assert(seenHeld && seenOver)
+  }
+
+  test("a bucket of cap + 1 rows split into partials of at most cap " +
+    "rows ends with n = cap + 1 and no members") {
+    val ids = (1L to Cap + 1L).toVector
+    val splits = Seq(Seq(Cap, 1), Seq(1, Cap), Seq(3, 3), Seq(2, 2, 2),
+      Seq.fill(Cap + 1)(1))
+    for (sizes <- splits) {
+      val parts = sizes.scanLeft(0)(_ + _).sliding(2).map {
+        case Seq(from, to) => partial(ids.slice(from, to))
+      }.toSeq
+      assert(parts.forall(p => p.n <= Cap && p.m == p.n), sizes)
+      val all = parts.map(p => members.deserialize(members.serialize(p)))
+        .reduce(members.merge)
+      assert(all.n == Cap + 1 && held(all).isEmpty, sizes)
     }
   }
 }

@@ -307,6 +307,35 @@ class ClustersSpec extends AnyFunSuite {
     assert(none.collect().isEmpty)
   }
 
+  test("localSolveMaxEdges boundary: exactly that many pair rows solve " +
+    "on the driver, one more runs distributed, same (id, comp) set") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    // chain, triangle, a self-loop, a duplicate, an id absent from the
+    // vertices (50) and a null vertex id (39)
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L),
+      (10L, 12L), (20L, 21L), (21L, 21L), (2L, 1L), (21L, 50L))
+    val verts = spark.range(40).select(when($"id" =!= 39, $"id").as("id"))
+    def run(pairs: Seq[(Long, Long)]) = {
+      val out = Clusters.connectedComponents(spark,
+        pairs.toDF("id_a", "id_b"), verts,
+        localSolveMaxEdges = edges.length)
+      // only the local path attaches a driver-built label relation
+      val local = out.queryExecution.analyzed
+        .collectFirst { case r: LocalRelation => r }.nonEmpty
+      (local, out.collect().map(r => (r.get(0), r.get(1))).toSet)
+    }
+    val (atCapLocal, atCap) = run(edges)
+    val (overCapLocal, overCap) = run(edges :+ ((3L, 4L)))
+    assert(atCapLocal)
+    assert(!overCapLocal)
+    assert(atCap == overCap)
+    val comp = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L,
+      11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L, 50L -> 20L)
+    assert(atCap == (0L until 39L).map(i => (i, comp.getOrElse(i, i)))
+      .toSet[(Any, Any)] + ((50L, 20L)) + ((null, null)))
+  }
+
   test("SPARK_GRAFT_CC_LOCAL_MAX: default when unset, non-negative " +
     "counts accepted, malformed or negative values rejected by name") {
     assert(Clusters.localSolveMax(None) == 4194304L)
